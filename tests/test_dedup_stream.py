@@ -215,6 +215,96 @@ def test_zero_survivor_first_batch_is_empty_state_not_poison(spark,
     # covered by test_corrupt_index_propagates_not_fails_open
 
 
+_EMPTY_STATE_DTYPES = {
+    "read_survivors": [("doc_id", "bigint"), ("source", "string"),
+                       ("batch_id", "int")],
+    "read_telemetry": [("n_docs", "bigint"), ("n_pass", "bigint"),
+                       ("pass_rate", "double"), ("avg_alpha", "double"),
+                       ("avg_chars", "double"), ("batch_id", "int")],
+    "read_recall_log": [("hits", "bigint"), ("total", "bigint"),
+                        ("recall", "double"), ("batch_id", "int")],
+    "read_rebuild_log": [("recall_before", "double"),
+                         ("recall_after", "double"), ("batch_id", "int")],
+}
+
+
+@pytest.mark.parametrize("reader", sorted(_EMPTY_STATE_DTYPES))
+def test_state_reader_on_empty_state(spark, tmp_path, reader):
+    """Before any batch commits, every streaming state reader returns
+    zero rows with its declared columns and types (the state table's
+    directory does not exist yet, which must read as empty)."""
+    from toymapreduce_go_spark.streaming import ingest, vector_stream
+
+    read = getattr(ingest, reader, None) or getattr(vector_stream, reader)
+    df = read(spark, str(tmp_path))
+    assert df.dtypes == _EMPTY_STATE_DTYPES[reader]
+    assert df.count() == 0
+
+
+def _dedup_state(spark, state):
+    """Sorted rows of the dedup tier's survivors and both state tables."""
+    from toymapreduce_go_spark.streaming.dedup_stream import (_BANDS_SCHEMA,
+                                                              _SIGS_SCHEMA)
+    from toymapreduce_go_spark.streaming.run import read_batches
+
+    return {
+        "survivors": sorted(tuple(r) for r in
+                            read_survivors(spark, state).collect()),
+        "sigs": sorted(tuple(r) for r in read_batches(
+            spark, f"{state}/sigs", _SIGS_SCHEMA).collect()),
+        "bands": sorted(tuple(r) for r in read_batches(
+            spark, f"{state}/bands", _BANDS_SCHEMA).collect()),
+    }
+
+
+def test_crash_between_sigs_and_bands_commits_replays_exactly_once(
+        spark, stream_state, tmp_path, monkeypatch):
+    """The crash window of the sigs-before-bands protocol: batch 1's
+    bands commit fails once, after its sigs commit has landed. In the
+    window batch 1's survivors are already visible (they are its sig
+    rows) while its band rows are not; a restart from the same
+    checkpoint replays batch 1 and lands survivors, sigs and bands equal
+    to an uninterrupted run."""
+    import toymapreduce_go_spark.streaming.dedup_stream as dedup_mod
+
+    real_commit = dedup_mod.commit_batch
+    fired = []
+
+    def flaky(df, path, batch_id):
+        if batch_id == 1 and path.endswith("bands") and not fired:
+            fired.append(path)
+            raise RuntimeError("injected crash after the sigs commit")
+        return real_commit(df, path, batch_id)
+
+    monkeypatch.setattr(dedup_mod, "commit_batch", flaky)
+    state = str(tmp_path / "crash_window")
+    with pytest.raises(Exception, match="injected crash"):
+        run_near_dedup_stream(
+            read_documents_stream(spark, SF_DIR, n_splits=3), state, spark)
+    window = _dedup_state(spark, state)
+    assert {r[-1] for r in window["survivors"]} == {0, 1}
+    assert {r[-1] for r in window["bands"]} == {0}
+    run_near_dedup_stream(read_documents_stream(spark, SF_DIR, n_splits=3),
+                          state, spark)
+    assert _dedup_state(spark, state) == _dedup_state(spark, stream_state)
+
+
+def test_torn_state_fails_closed(spark, tmp_path):
+    """A band row whose signature is gone (the sig table deleted outside
+    the stream) must fail the step: reading the missing signatures as
+    'no near-dup' would accept duplicates."""
+    import os
+    import shutil
+
+    state = str(tmp_path / "torn_state")
+    docs = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
+            .orderBy("doc_id").limit(30))
+    near_dedup_batch_step(spark, docs, 0, state)
+    shutil.rmtree(os.path.join(state, "sigs"))
+    with pytest.raises(Exception, match="torn state"):
+        near_dedup_batch_step(spark, docs, 1, state)
+
+
 def _telemetry_multiset(spark, state):
     from toymapreduce_go_spark.streaming.ingest import read_telemetry
 

@@ -1,6 +1,10 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for every declared + tier2 query into
-plans/r14/<query>_<tag>.txt. Usage: python tools/capture_plans_r14.py before
+"""Capture .explain("formatted") for every declared + tier-2 query (or
+the named ones) into plans/<round>/<query>_<tag>.txt.
+
+Usage: python tools/capture_plans.py <round> [tag] [query ...]
+e.g.   python tools/capture_plans.py r16 before
+The catalog is $SPARK_GRAFT_SF_DIR, as for bench.py.
 """
 from __future__ import annotations
 
@@ -9,27 +13,27 @@ import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
+from bench import SF_DIR, TIER2_QUERIES  # noqa: E402
 from toymapreduce_go_spark.plans.queries import DECLARED, QUERIES  # noqa: E402
 from toymapreduce_go_spark.session import build_session  # noqa: E402
 
-TIER2 = ["image_phash", "audio_fingerprint", "video_fingerprint",
-         "heavy_hitters", "semantic_dedup", "fetch_list"]
-
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or list(DECLARED) + TIER2
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r14")
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or list(DECLARED) + TIER2_QUERIES
+    out_dir = os.path.join(REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
-    spark = build_session("capture-plans-r14")
+    spark = build_session(f"capture-plans-{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         try:
-            df = QUERIES[name](spark, sf_dir)
+            df = QUERIES[name](spark, SF_DIR)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")

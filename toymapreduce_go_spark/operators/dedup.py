@@ -1722,7 +1722,7 @@ def near_dedup_vs_index(batch: DataFrame, path: str,
     probing batch's own survivors, which self-match at est 1.0 and
     silently flag everything (measured, not hypothetical). This is the
     streaming tier's ``batch_id < N`` state-read contract
-    (``streaming/dedup_stream.py:_read_prior_state``) in batch form;
+    (``streaming/run.py:read_batches``) in batch form;
     the partition filter prunes at the file listing, so old probes
     also never pay for newer snapshots.
 

@@ -186,7 +186,10 @@ def _streaming_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_survivors"),
                  F.sum(F.pmod(F.col("doc_id"), F.lit(CKSUM_MOD)))
                  .alias("survivor_checksum")))
+    # only batches that carried documents: an empty source still
+    # stages one schema-only file, which arrives as a zero-doc batch
     return (read_telemetry(spark, state_dir)
+            .filter("n_docs > 0")
             .join(surv, "batch_id", "left")
             .select("batch_id", "n_docs", "n_pass", "pass_rate",
                     "n_survivors", "survivor_checksum")

@@ -8,13 +8,15 @@ accepted so far* — without ever re-scanning the historical corpus.
 
 Design (the standard Bronze→Silver incremental-dedup shape):
 
-- State is a **band-bucket index** plus a **survivor-signature table**:
-  one ``(band_id, band_hash, doc_id)`` row per accepted document per
-  LSH band (~``n_bands`` × 16 bytes/survivor) and one
-  ``(doc_id, sig)`` row per survivor (``n_hashes`` × 8 bytes ≈ 512 B at
-  the default 64 hashes), both parquet partitioned by ``batch_id``. At
-  100 TB/day this is the only structure that scales: the historical
-  corpus is never touched again, only its (much smaller) index, and the
+- State is two ``batch_id``-partitioned tables in ``streaming.run``'s
+  format: the **band-bucket index** ``bands``, one ``(doc_id, band_id,
+  band_hash)`` row per accepted document per LSH band (~``n_bands`` ×
+  16 bytes/survivor), and the **survivor signatures** ``sigs``, one
+  ``(doc_id, source, sig)`` row per accepted document (``n_hashes`` × 8
+  bytes ≈ 512 B at the default 64 hashes). The sig rows ARE the
+  survivors: ``read_survivors`` is a projection of ``sigs``. At 100
+  TB/day this is the only structure that scales: the historical corpus
+  is never touched again, only its (much smaller) index, and the
   per-batch probe is a bucket join on (band_id, band_hash) — the same
   shape as the batch pipeline's candidate step.
 - Per micro-batch (``foreachBatch``): bucket collisions generate
@@ -24,20 +26,20 @@ Design (the standard Bronze→Silver incremental-dedup shape):
   minhash positions, ``est_jaccard_expr``) against the stored survivor
   signature before the document is dropped. ``threshold=None`` selects
   the candidate-rule-only mode (any bucket collision drops — more
-  aggressive, LSH false positives become permanent losses; state stays
-  band-rows-only sized). Within a batch the verification is against the
-  bucket's min-doc_id representative, not all bucket members — a
-  deliberate O(bucket) approximation of the batch tier's full bucket
-  self-join.
-- **Exactly-once across restarts**: every write is a deterministic
-  dynamic-partition overwrite of ``batch_id=<N>``, so a replayed batch
-  (checkpoint restart re-delivers the last uncommitted batch) rewrites
-  its own partitions byte-identically instead of duplicating them; the
-  probe explicitly filters the index to ``batch_id < N`` so a replay
-  never sees its own half-written state. Signatures commit BEFORE band
-  rows, so a crash between the two can leave sigs-without-bands (benign
-  — invisible to the probe, overwritten on replay) but never
-  bands-without-sigs (which would break verification).
+  aggressive, LSH false positives become permanent losses). Within a
+  batch the verification is against the bucket's min-doc_id
+  representative, not all bucket members — a deliberate O(bucket)
+  approximation of the batch tier's full bucket self-join.
+- **Exactly-once across restarts**: both commits are ``commit_batch``
+  overwrites of partition ``batch_id=<N>``, so a replayed batch
+  rewrites its own partitions byte-identically, and the probe reads
+  state with ``before=N`` so a replay never sees its own half-written
+  state. Signatures commit BEFORE band rows: a crash between the two
+  leaves sigs-without-bands, never bands-without-sigs (an indexed doc
+  with no signature fails the step rather than read as no match). In
+  that window batch N's survivors are already visible to
+  ``read_survivors``; the replay recomputes the same set and rewrites
+  both partitions, ending equal to an uninterrupted run.
 
 No reference parity to cite: the reference engine has no streaming at
 all (SURVEY.md §2c); the *banding + verification semantics* are the
@@ -49,7 +51,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,36 +58,14 @@ from toymapreduce_go_spark.operators.dedup import (N_BANDS, N_HASHES,
                                                    band_rows,
                                                    est_jaccard_expr,
                                                    minhash_signatures)
-from toymapreduce_go_spark.streaming.run import run_available_now
+from toymapreduce_go_spark.streaming.run import (commit_batch, read_batches,
+                                                 run_available_now)
 
 _BANDS_SUBDIR = "bands"
 _SIGS_SUBDIR = "sigs"
-_OUT_SUBDIR = "survivors"
-
-
-def _read_prior_state(spark: SparkSession, path: str,
-                      batch_id: int) -> DataFrame | None:
-    """Read a batch_id-partitioned state table restricted to batches
-    committed strictly before this one. Returns None ONLY when the
-    state is genuinely empty: the path does not exist yet (the
-    first-batch case), or it exists but holds no parquet files — a
-    dynamic-partition overwrite of a ZERO-survivor batch writes the
-    directory with no data files, and the subsequent read raises
-    UNABLE_TO_INFER_SCHEMA, which must mean "empty state", not a
-    permanently failed stream. Every other failure — corrupt footers, a
-    transient filesystem error — propagates: swallowing those would
-    silently disable cross-batch dedup for the micro-batch and fail the
-    exactly-once/dedup contract *open*."""
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException as e:
-        cond = getattr(e, "getCondition", None)
-        cond = cond() if callable(cond) else None
-        empty_conds = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-        if cond in empty_conds or any(c in str(e) for c in empty_conds):
-            return None
-        raise
-    return df.filter(F.col("batch_id") < F.lit(batch_id))
+_BANDS_SCHEMA = "doc_id bigint, band_id int, band_hash bigint, batch_id int"
+_SIGS_SCHEMA = ("doc_id bigint, source string, sig array<bigint>, "
+                "batch_id int")
 
 
 def near_dedup_batch_step(spark: SparkSession, batch_df: DataFrame,
@@ -96,49 +75,40 @@ def near_dedup_batch_step(spark: SparkSession, batch_df: DataFrame,
                           threshold: float | None = 0.5) -> None:
     """One ``foreachBatch`` step: probe the index, verify candidates by
     estimated Jaccard (unless ``threshold is None``), pick survivors,
-    commit this batch's sigs + index + output partitions idempotently."""
+    commit this batch's sigs + index partitions idempotently."""
     bands_path = os.path.join(state_dir, _BANDS_SUBDIR)
     sigs_path = os.path.join(state_dir, _SIGS_SUBDIR)
-    out_path = os.path.join(state_dir, _OUT_SUBDIR)
 
     batch = batch_df.select("doc_id", "source", "text")
-    sig = minhash_signatures(batch, n=n, n_hashes=n_hashes).persist()
+    sig = (minhash_signatures(batch, n=n, n_hashes=n_hashes)
+           .join(batch.select("doc_id", "source"), "doc_id").persist())
     bands = band_rows(sig, n_hashes=n_hashes, n_bands=n_bands)
 
     # Probe the historical index. batch_id < N guards replay: a restarted
     # batch must not match the band rows it already half-committed.
-    hist_bands = _read_prior_state(spark, bands_path, batch_id)
-    if hist_bands is None:
-        hist_dup_ids = None
-    else:
-        cand = (bands.join(
-            hist_bands.select("band_id", "band_hash",
-                              F.col("doc_id").alias("hist_id")),
-            ["band_id", "band_hash"])
-            .select("doc_id", "hist_id").distinct())
-        if threshold is None:
-            hist_dup_ids = cand.select("doc_id").distinct()
-        else:
-            hist_sigs = _read_prior_state(spark, sigs_path, batch_id)
-            if hist_sigs is None:
-                raise RuntimeError(
-                    f"torn state at {state_dir}: band index exists but "
-                    f"signature table is missing — cannot verify "
-                    f"candidates (write order guarantees sigs commit "
-                    f"first, so this indicates external deletion)")
-            verified = (
-                cand
-                .join(sig.select("doc_id", F.col("sig").alias("sig_a")),
-                      "doc_id")
-                .join(hist_sigs.select(F.col("doc_id").alias("hist_id"),
-                                       F.col("sig").alias("sig_b")),
-                      "hist_id")
-                .filter(est_jaccard_expr("sig_a", "sig_b", n_hashes)
-                        >= F.lit(threshold)))
-            hist_dup_ids = verified.select("doc_id").distinct()
-
-    fresh = bands if hist_dup_ids is None else bands.join(
-        hist_dup_ids, "doc_id", "left_anti")
+    hist_bands = read_batches(spark, bands_path, _BANDS_SCHEMA,
+                              before=batch_id)
+    cand = (bands.join(
+        hist_bands.select("band_id", "band_hash",
+                          F.col("doc_id").alias("hist_id")),
+        ["band_id", "band_hash"])
+        .select("doc_id", "hist_id").distinct())
+    if threshold is not None:
+        hist_sigs = read_batches(spark, sigs_path, _SIGS_SCHEMA,
+                                 before=batch_id)
+        torn = f"torn state at {state_dir}: an indexed doc has no sig"
+        cand = (
+            cand
+            .join(sig.select("doc_id", F.col("sig").alias("sig_a")),
+                  "doc_id")
+            .join(hist_sigs.select(F.col("doc_id").alias("hist_id"),
+                                   F.col("sig").alias("sig_b")),
+                  "hist_id", "left")
+            .filter(F.when(F.col("sig_b").isNull(),
+                           F.raise_error(F.lit(torn)))
+                    .otherwise(est_jaccard_expr("sig_a", "sig_b", n_hashes)
+                               >= F.lit(threshold))))
+    fresh = bands.join(cand.select("doc_id"), "doc_id", "left_anti")
 
     # Within-batch survivor rule: lowest doc_id per bucket is the
     # representative; any doc sharing a bucket with a lower fresh doc_id
@@ -160,34 +130,18 @@ def near_dedup_batch_step(spark: SparkSession, batch_df: DataFrame,
             .filter(est_jaccard_expr("sig_a", "sig_b", n_hashes)
                     >= F.lit(threshold)))
     intra_dup_ids = intra_cand.select("doc_id").distinct()
-    # persist the survivor bands for the batch (the sig.persist()
-    # convention): all three commits below consume them, and without
-    # the pin each write re-runs the whole probe + verify + intra-dedup
-    # chain (r15 — measured 3x the per-batch candidate work)
-    survivor_bands = fresh.join(intra_dup_ids, "doc_id",
-                                "left_anti").persist()
-    survivor_ids = survivor_bands.select("doc_id").distinct()
+    survivor_bands = fresh.join(intra_dup_ids, "doc_id", "left_anti")
 
-    # Idempotent commits: deterministic content per (batch partition),
-    # dynamic-partition overwrite of ONLY batch_id=<N>. Sigs first (see
-    # module docstring's crash-window note).
-    (sig.join(survivor_ids, "doc_id", "left_semi")
-     .select("doc_id", "sig")
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(sigs_path))
-    (survivor_bands.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(bands_path))
-    survivors = batch.join(survivor_ids, "doc_id", "left_semi")
-    (survivors.select("doc_id", "source")
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(out_path))
-    survivor_bands.unpersist()
+    # Idempotent commits, sigs first (see the module docstring's
+    # crash-window note). The sigs commit drops every cached plan that
+    # reads sigs/, so the band rows are derived from the committed sig
+    # rows instead of re-running the probe chain.
+    commit_batch(sig.join(survivor_bands, "doc_id", "left_semi")
+                 .select("doc_id", "source", "sig"), sigs_path, batch_id)
+    committed = (read_batches(spark, sigs_path, _SIGS_SCHEMA)
+                 .filter(F.col("batch_id") == batch_id))
+    commit_batch(band_rows(committed, n_hashes=n_hashes, n_bands=n_bands),
+                 bands_path, batch_id)
     sig.unpersist()
 
 
@@ -209,4 +163,8 @@ def run_near_dedup_stream(documents_stream: DataFrame, state_dir: str,
 
 
 def read_survivors(spark: SparkSession, state_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(state_dir, _OUT_SUBDIR))
+    """(doc_id, source, batch_id) of every accepted document: the
+    committed sig rows."""
+    return (read_batches(spark, os.path.join(state_dir, _SIGS_SUBDIR),
+                         _SIGS_SCHEMA)
+            .select("doc_id", "source", "batch_id"))

@@ -5,7 +5,7 @@ composes the round-7/8 streaming pieces over a single document stream:
       → quality telemetry          (one row per batch, drift monitor)
       → curation gate filter       (the batch pipeline's exact predicate)
       → incremental near-dedup     (index-probe MinHash, verified)
-      → survivors parquet
+      → sigs + bands state         (survivors = a projection of sigs)
 
 This is the ops entry point the r8 verdict asked for (item 6): the
 pieces composed in ``tests/test_dedup_stream.py`` (a42b921) promoted to
@@ -14,14 +14,14 @@ a first-class job with ONE checkpoint and ONE state directory, plus a
 
 Exactly-once across restarts comes from composing two already-idempotent
 steps under one checkpoint: every write either side performs is a
-deterministic dynamic-partition overwrite of ``batch_id=<N>``
-(``quality_stream.quality_batch_step``, ``dedup_stream.
-near_dedup_batch_step``), so a crash anywhere inside batch N — telemetry
-committed but dedup not, dedup half-committed — is healed by the
-checkpoint re-delivering batch N, which rewrites exactly its own
-partitions byte-identically. The telemetry row is computed from the RAW
-batch (the monitor must see what arrives, not what survives), the dedup
-tier from the gate-filtered batch.
+``run.commit_batch`` — a deterministic dynamic-partition overwrite of
+``batch_id=<N>`` (``quality_stream.quality_batch_step``,
+``dedup_stream.near_dedup_batch_step``), so a crash anywhere inside
+batch N — telemetry committed but dedup not, dedup half-committed — is
+healed by the checkpoint re-delivering batch N, which rewrites exactly
+its own partitions byte-identically. The telemetry row is computed from
+the RAW batch (the monitor must see what arrives, not what survives),
+the dedup tier from the gate-filtered batch.
 
 Scale: the composition adds nothing to either tier's cost profile — the
 gate is scan-side codegen (+ the repetition agg, keyed by doc_id within

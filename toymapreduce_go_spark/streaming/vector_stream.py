@@ -33,9 +33,11 @@ from ..operators.similarity import (NoVectorIndexModel,
                                     extend_vector_index,
                                     write_vector_index)
 from .events_stream import read_table_stream
-from .run import run_available_now
+from .run import commit_batch, read_batches, run_available_now
 
 VINDEX_SUBDIR = "vindex"
+_RECALL_SCHEMA = "hits bigint, total bigint, recall double, batch_id int"
+_REBUILD_SCHEMA = "recall_before double, recall_after double, batch_id int"
 
 
 def read_embeddings_stream(spark: SparkSession, sf_dir: str,
@@ -48,16 +50,16 @@ def read_embeddings_stream(spark: SparkSession, sf_dir: str,
 
 
 def read_recall_log(spark: SparkSession, state_dir: str) -> DataFrame:
-    """(batch_id, hits, total, recall) — one row per ingested batch
+    """(hits, total, recall, batch_id) — one row per ingested batch
     when the ingest runs with ``monitor_recall=True``."""
-    return spark.read.parquet(f"{state_dir}/recall_log")
+    return read_batches(spark, f"{state_dir}/recall_log", _RECALL_SCHEMA)
 
 
 def read_rebuild_log(spark: SparkSession, state_dir: str) -> DataFrame:
-    """(batch_id, recall_before, recall_after) — one row per batch
+    """(recall_before, recall_after, batch_id) — one row per batch
     whose monitored recall breached the rebuild floor and triggered an
     in-place ``rebuild_vector_index``."""
-    return spark.read.parquet(f"{state_dir}/rebuild_log")
+    return read_batches(spark, f"{state_dir}/rebuild_log", _REBUILD_SCHEMA)
 
 
 def _record_recall(spark: SparkSession, state_dir: str,
@@ -76,23 +78,20 @@ def _record_recall(spark: SparkSession, state_dir: str,
         r = vector_index_recall(spark, idx)
     except AnalysisException:
         return None
-    (spark.createDataFrame(
-        [(batch_id, r["hits"], r["total"], float(r["recall"]))],
-        "batch_id long, hits long, total long, recall double")
-     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(f"{state_dir}/recall_log"))
+    commit_batch(spark.createDataFrame(
+        [(r["hits"], r["total"], float(r["recall"]))],
+        "hits long, total long, recall double"),
+        f"{state_dir}/recall_log", batch_id)
     return float(r["recall"])
 
 
 def _write_rebuild_row(spark: SparkSession, state_dir: str,
                        batch_id: int, before: float,
                        after: float | None) -> None:
-    (spark.createDataFrame(
-        [(batch_id, float(before),
-          None if after is None else float(after))],
-        "batch_id long, recall_before double, recall_after double")
-     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(f"{state_dir}/rebuild_log"))
+    commit_batch(spark.createDataFrame(
+        [(float(before), None if after is None else float(after))],
+        "recall_before double, recall_after double"),
+        f"{state_dir}/rebuild_log", batch_id)
 
 
 def _rebuild_on_drift(spark: SparkSession, state_dir: str,
@@ -130,14 +129,8 @@ def _heal_rebuild_log(spark: SparkSession, state_dir: str,
     rebuild and its phase-B write: the replayed batch's measured
     recall IS the post-rebuild recall (same ``vector_index_recall``
     over the same rebuilt index)."""
-    from pyspark.errors import AnalysisException
-
-    from pyspark.sql import functions as F
-    try:
-        log = spark.read.parquet(f"{state_dir}/rebuild_log")
-    except AnalysisException:
-        return
-    rows = log.filter(F.col("batch_id") == batch_id).collect()
+    rows = (read_rebuild_log(spark, state_dir)
+            .filter(f"batch_id = {batch_id}").collect())
     if rows and rows[0]["recall_after"] is None:
         _write_rebuild_row(spark, state_dir, batch_id,
                            float(rows[0]["recall_before"]), recall_now)
