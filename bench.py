@@ -18,7 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from toymapreduce_go_spark.plans.queries import DECLARED, QUERIES  # noqa: E402
+from toymapreduce_go_spark.plans.queries import (  # noqa: E402
+    DECLARED, QUERIES, TIER2_QUERIES)
 from toymapreduce_go_spark.session import build_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -27,35 +28,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # (embedding_near_dup) are capped by their operator design to the probe/
 # bucket pattern at scale; they run as declared here.
 BENCH_QUERIES = list(DECLARED)
-
-# Tier 2 (round-9 verdict item 9): the heavyweight PYTEST_ONLY
-# operators — decode-bound multimodal dedup, the CMS-gated exact pass,
-# SemDeDup — whose regressions previously surfaced only in per-round
-# decade studies. Timed single-pass AFTER the declared best-of-2 (JVM,
-# parquet footers, and Python worker pool fully warm; each is
-# multi-second at sf0.1 so single-pass noise stays under the guard's
-# 1.5x-and-1s bar), recorded under "tier2" — EXCLUDED from the headline
-# declared total so cross-round value comparisons stay apples-to-apples
-# — and guarded against the prior round exactly like the declared tier.
-TIER2_QUERIES = ["image_phash", "audio_fingerprint", "video_fingerprint",
-                 "heavy_hitters", "semantic_dedup",
-                 # r11: the crawl-scheduling capstone — the unified
-                 # fetch list SUPERSETS crawl_frontier (PageRank
-                 # iterations + both discovery channels + the recrawl
-                 # channel + the budget window), so benching it covers
-                 # the whole multi-second r11 scheduling family once;
-                 # since r14 it also covers the composed redirect
-                 # resolution (edge synthesis + hop walk + re-key +
-                 # terminal-host gates on every channel)
-                 "fetch_list",
-                 # r15 (verdict item 7): the streaming tier had no bench
-                 # numbers, so optimization rounds couldn't touch it
-                 # safely — one fixed 3-batch availableNow replay of the
-                 # composed curation ingest (telemetry → gate →
-                 # incremental near-dedup), fresh state + fresh source
-                 # staging per invocation (no cross-run reuse), guarded
-                 # against its prior like every other tier2 entry
-                 "streaming_cycle"]
 
 
 def materialize(df) -> None:
@@ -194,7 +166,13 @@ def main() -> None:
             if name not in timings or el < timings[name]:
                 timings[name] = el
 
-    # Tier 2: single pass on the now-fully-warm JVM/worker pool.
+    # Tier 2: the heavyweight pytest-only queries (plans/queries.py
+    # says which, and why each one). Timed single-pass on the now-fully-
+    # warm JVM/worker pool (each is multi-second at sf0.1 so single-pass
+    # noise stays under the guard's 1.5x-and-1s bar), recorded under
+    # "tier2" — EXCLUDED from the headline declared total so cross-round
+    # value comparisons stay apples-to-apples — and guarded against the
+    # prior round exactly like the declared tier.
     tier2: dict[str, float] = {}
     for name in TIER2_QUERIES:
         try:

@@ -122,13 +122,18 @@ def test_load_prior_bench_tier2_key(tmp_path):
 def test_tier2_names_are_registered_and_disjoint():
     """Every tier2 name must be a real QUERIES entry (so the bench can
     run it) and NOT declared (so the headline total stays comparable
-    across rounds)."""
+    across rounds). The names and their order are pinned too: bench
+    guard baselines are keyed by them."""
     from bench import TIER2_QUERIES
 
     from toymapreduce_go_spark.plans.queries import DECLARED, QUERIES
 
     assert set(TIER2_QUERIES) <= set(QUERIES)
     assert not set(TIER2_QUERIES) & set(DECLARED)
+    assert TIER2_QUERIES == ["image_phash", "audio_fingerprint",
+                             "video_fingerprint", "heavy_hitters",
+                             "semantic_dedup", "fetch_list",
+                             "streaming_cycle"]
 
 
 def test_tier2_guard_fires_on_planted_regression(tmp_path):

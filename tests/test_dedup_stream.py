@@ -397,7 +397,7 @@ def test_stream_ingest_from_html_front_stage(spark, tmp_path,
 
     ref = str(tmp_path / "ref_html")
     run_curation_ingest(read_documents_stream(spark, SF_DIR, n_splits=3),
-                        ref, spark, from_html=True)
+                        ref, spark, container="html")
     ref_tel = _telemetry_multiset(spark, ref)
     ref_surv = _survivor_ids(spark, ref)
     assert len(ref_tel) == 3 and ref_surv
@@ -430,10 +430,10 @@ def test_stream_ingest_from_html_front_stage(spark, tmp_path,
     with _pytest.raises(Exception, match="injected crash"):
         run_curation_ingest(
             read_documents_stream(spark, SF_DIR, n_splits=3),
-            crash, spark, from_html=True)
+            crash, spark, container="html")
     assert fired["done"]
     run_curation_ingest(read_documents_stream(spark, SF_DIR, n_splits=3),
-                        crash, spark, from_html=True)
+                        crash, spark, container="html")
     assert _telemetry_multiset(spark, crash) == ref_tel
     assert _survivor_ids(spark, crash) == ref_surv
 
@@ -450,7 +450,7 @@ def test_stream_ingest_tiny_batches_are_not_emptied(spark, tmp_path):
 
     state = str(tmp_path / "tiny")
     run_curation_ingest(read_documents_stream(spark, SF_DIR, n_splits=10),
-                        state, spark, from_html=True)
+                        state, spark, container="html")
     tel = read_telemetry(spark, state).collect()
     assert len(tel) == 10
     # every batch kept its documents (the telemetry row is computed on
@@ -468,7 +468,7 @@ def test_stream_ingest_from_pdf_front_stage(spark, tmp_path):
 
     pdf_state = str(tmp_path / "pdf")
     run_curation_ingest(read_documents_stream(spark, SF_DIR, n_splits=2),
-                        pdf_state, spark, from_pdf=True)
+                        pdf_state, spark, container="pdf")
     assert _survivor_ids(spark, pdf_state)
     plain = str(tmp_path / "plain")
     run_curation_ingest(read_documents_stream(spark, SF_DIR, n_splits=2),

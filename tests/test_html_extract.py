@@ -112,7 +112,7 @@ def test_pipeline_front_stage(spark):
     the stage and the curated output still packs."""
     from toymapreduce_go_spark.pipeline import build_training_corpus
     curated, funnel = build_training_corpus(
-        spark, SF_DIR, from_html=True)
+        spark, SF_DIR, container="html")
     stages = {r["stage"]: r["n_docs"] for r in funnel.collect()}
     assert "0a_html_extracted" in stages
     assert stages["0a_html_extracted"] > 0

@@ -105,7 +105,7 @@ def test_pipeline_front_stage_from_pdf(spark):
     """--from-pdf composes extraction as stage 0a'; the funnel gains
     the stage and curated text carries no PDF syntax."""
     from toymapreduce_go_spark.pipeline import build_training_corpus
-    curated, funnel = build_training_corpus(spark, SF_DIR, from_pdf=True)
+    curated, funnel = build_training_corpus(spark, SF_DIR, container="pdf")
     stages = {r["stage"]: r["n_docs"] for r in funnel.collect()}
     assert "0a_pdf_extracted" in stages and stages["0a_pdf_extracted"] > 0
     assert curated.count() > 0

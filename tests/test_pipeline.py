@@ -52,6 +52,25 @@ def test_cli_corpus_build(spark, tmp_path, capsys):
     assert spark.read.parquet(out).count() == int(lines[-1][1])
 
 
+def test_cli_rejects_two_containers(tmp_path, monkeypatch, capsys):
+    """The container flags are one choice: asking for two is an
+    argument error, raised before any session or stage starts."""
+    import pytest
+
+    import toymapreduce_go_spark.session as session
+    from toymapreduce_go_spark.__main__ import main
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("parsed two containers")
+
+    monkeypatch.setattr(session, "build_session", no_session)
+    with pytest.raises(SystemExit) as exc:
+        main(["--corpus-build", SF_DIR, "--out", str(tmp_path / "out"),
+              "--from-html", "--from-pdf"])
+    assert exc.value.code == 2
+    assert "not allowed with" in capsys.readouterr().err
+
+
 def test_pipeline_output_through_registered_scheme(spark, tmp_path):
     """r7 verdict item: the corpus pipeline's output commit must be
     scheme-agnostic like the reference's DFS flag. Register the mock
@@ -332,7 +351,7 @@ def test_pipeline_blocklist_stage(spark):
     assert n_blocked > 0
     curated, funnel = build_training_corpus(
         spark, SF_DIR, docs=docs, blocklist=fixture_blocklist(),
-        from_html=True)
+        container="html")
     stages = {r["stage"]: r["n_docs"] for r in funnel.collect()}
     assert stages["0a0_blocklisted"] == n - n_blocked
     assert stages["0a_html_extracted"] <= stages["0a0_blocklisted"]

@@ -282,10 +282,10 @@ def test_pipeline_front_stage_from_warc_equals_from_html(spark):
     re-attached by doc_id on the fixture path)."""
     from toymapreduce_go_spark.pipeline import build_training_corpus
     curated_w, funnel_w = build_training_corpus(spark, SF_DIR,
-                                                from_warc=True)
+                                                container="warc")
     stages = {r["stage"]: r["n_docs"] for r in funnel_w.collect()}
     assert stages.get("0a_warc_extracted", 0) > 0
-    curated_h, _ = build_training_corpus(spark, SF_DIR, from_html=True)
+    curated_h, _ = build_training_corpus(spark, SF_DIR, container="html")
     got = {(r.doc_id, r.source, r.lang, r.text)
            for r in curated_w.collect()}
     want = {(r.doc_id, r.source, r.lang, r.text)
@@ -310,8 +310,8 @@ def test_stream_ingest_from_warc_front_stage(spark, tmp_path):
                                  max_files_per_trigger=1, n_splits=1)
 
     states = {}
-    for mode, kw in (("warc", {"from_warc": True}),
-                     ("html", {"from_html": True}), ("plain", {})):
+    for mode, kw in (("warc", {"container": "warc"}),
+                     ("html", {"container": "html"}), ("plain", {})):
         states[mode] = str(tmp_path / mode)
         run_curation_ingest(stream(), states[mode], spark, **kw)
     tel = {m: sorted(tuple(r) for r in

@@ -4,7 +4,7 @@ the named ones) into plans/<round>/<query>_<tag>.txt.
 
 Usage: python tools/capture_plans.py <round> [tag] [query ...]
 e.g.   python tools/capture_plans.py r16 before
-The catalog is $SPARK_GRAFT_SF_DIR, as for bench.py.
+The catalog is $SPARK_GRAFT_SF_DIR (required).
 """
 from __future__ import annotations
 
@@ -16,13 +16,14 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import SF_DIR, TIER2_QUERIES  # noqa: E402
-from toymapreduce_go_spark.plans.queries import DECLARED, QUERIES  # noqa: E402
+from toymapreduce_go_spark.plans.queries import (  # noqa: E402
+    DECLARED, QUERIES, TIER2_QUERIES)
 from toymapreduce_go_spark.session import build_session  # noqa: E402
 
 
 def main() -> None:
-    if len(sys.argv) < 2:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if len(sys.argv) < 2 or not sf_dir:
         sys.exit(__doc__)
     rnd = sys.argv[1]
     tag = sys.argv[2] if len(sys.argv) > 2 else "before"
@@ -33,7 +34,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         try:
-            df = QUERIES[name](spark, SF_DIR)
+            df = QUERIES[name](spark, sf_dir)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")

@@ -17,11 +17,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from toymapreduce_go_spark.plans.queries import DECLARED, QUERIES  # noqa: E402
+from toymapreduce_go_spark.plans.queries import (  # noqa: E402
+    DECLARED, QUERIES, TIER2_QUERIES)
 from toymapreduce_go_spark.session import build_session  # noqa: E402
-
-TIER2 = ["image_phash", "audio_fingerprint", "video_fingerprint",
-         "heavy_hitters", "semantic_dedup", "fetch_list"]
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -29,7 +27,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     out_path = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    names = sys.argv[3:] or list(DECLARED) + TIER2
+    names = sys.argv[3:] or list(DECLARED) + TIER2_QUERIES
 
     spark = build_session("measure-r14")
     spark.sparkContext.setLogLevel("ERROR")

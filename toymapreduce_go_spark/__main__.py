@@ -143,12 +143,6 @@ def main(argv: list[str] | None = None) -> None:
                         "(scan-side plan-literal filter, no join); the "
                         "literal 'fixture' uses the synthesized-host "
                         "deny list")
-    p.add_argument("--from-html", action="store_true",
-                   help="with --corpus-build: run HTML→text extraction "
-                        "(tag strip + entity unescape + line-frequency "
-                        "boilerplate removal) as the front stage; an "
-                        "html column is consumed directly, a text-only "
-                        "frame gets the synthesized-page fixture path")
     p.add_argument("--robots", action="store_true",
                    help="with --corpus-build: drop documents whose "
                         "canonical URL the domain's robots.txt rules "
@@ -165,21 +159,34 @@ def main(argv: list[str] | None = None) -> None:
                         "utf-8-as-cp1252 mojibake and strip C0 "
                         "controls before PII/hashing (scan-side, "
                         "operators/textfix.py)")
-    p.add_argument("--from-pdf", action="store_true",
-                   help="with --corpus-build: run PDF→text extraction "
-                        "(content-stream Tj text + the shared "
-                        "line-frequency boilerplate removal) as the "
-                        "front stage; a pdf column is consumed "
-                        "directly, a text-only frame gets the "
-                        "synthesized-PDF fixture path")
-    p.add_argument("--from-warc", action="store_true",
-                   help="with --corpus-build/--stream-ingest: run "
-                        "WARC→text extraction (record split, HTTP "
-                        "strip incl. chunked transfer decoding, the "
-                        "shared boilerplate removal) as the front "
-                        "stage; a warc files column is consumed "
-                        "directly, a text-only frame gets the "
-                        "synthesized-WARC fixture path")
+    # one container at a time: the flags share one destination, and
+    # argparse rejects two of them at parse time
+    box = p.add_mutually_exclusive_group()
+    box.add_argument("--from-html", dest="container", action="store_const",
+                     const="html",
+                     help="with --corpus-build/--stream-ingest: run "
+                          "HTML→text extraction (tag strip + entity "
+                          "unescape + line-frequency boilerplate "
+                          "removal) as the front stage; an html column "
+                          "is consumed directly, a text-only frame gets "
+                          "the synthesized-page fixture path")
+    box.add_argument("--from-pdf", dest="container", action="store_const",
+                     const="pdf",
+                     help="with --corpus-build/--stream-ingest: run "
+                          "PDF→text extraction (content-stream Tj text "
+                          "+ the shared line-frequency boilerplate "
+                          "removal) as the front stage; a pdf column is "
+                          "consumed directly, a text-only frame gets the "
+                          "synthesized-PDF fixture path")
+    box.add_argument("--from-warc", dest="container", action="store_const",
+                     const="warc",
+                     help="with --corpus-build/--stream-ingest: run "
+                          "WARC→text extraction (record split, HTTP "
+                          "strip incl. chunked transfer decoding, the "
+                          "shared boilerplate removal) as the front "
+                          "stage; a warc files column is consumed "
+                          "directly, a text-only frame gets the "
+                          "synthesized-WARC fixture path")
     p.add_argument("--chunk-long", action="store_true",
                    help="with --corpus-build: split documents whose "
                         "token count exceeds the packing budget into "
@@ -210,9 +217,7 @@ def main(argv: list[str] | None = None) -> None:
         stream = read_documents_stream(spark, args.stream_ingest,
                                        n_splits=args.n_splits)
         run_curation_ingest(stream, args.out, spark,
-                            from_html=args.from_html,
-                            from_pdf=args.from_pdf,
-                            from_warc=args.from_warc,
+                            container=args.container,
                             fix_encoding=args.fix_encoding)
         for r in (read_telemetry(spark, args.out)
                   .orderBy("batch_id").collect()):
@@ -246,8 +251,7 @@ def main(argv: list[str] | None = None) -> None:
             lm_filter=args.lm_filter, dedup_lines=args.dedup_lines,
             dsir_frac=args.dsir_select, prior_docs=prior,
             near_prior=args.near_prior, chunk_long=args.chunk_long,
-            from_html=args.from_html, from_pdf=args.from_pdf,
-            from_warc=args.from_warc,
+            container=args.container,
             blocklist=deny, robots=args.robots,
             fix_encoding=args.fix_encoding,
             eval_docs=(spark.read.parquet(args.eval_docs)

@@ -522,79 +522,57 @@ def near_dedup_minhash_portable(documents: DataFrame) -> DataFrame:
 # 4. SimHash
 
 
-PORTABLE_SIMHASH_BITS = 60
+SIMHASH_BITS = 60
 
 
-def simhash_signatures(documents: DataFrame, bits: int = 64,
-                       portable: bool = False) -> DataFrame:
-    """(doc_id, simhash) SimHash per doc over its token multiset.
+def simhash_signatures(documents: DataFrame) -> DataFrame:
+    """(doc_id, simhash) 60-bit SimHash per doc over its token multiset.
 
     simhash bit j = sign of Σ_tokens (±1 depending on bit j of the token
-    hash). Entirely JVM-side: per-doc token explode → 'bits' codegen'd
+    hash). Entirely JVM-side: per-doc token explode → 60 codegen'd
     ±1-vote sum aggregates with map-side partials — no arrays or
-    collect_list on the shuffle.
-
-    Hash modes (same pattern as ``rolling_fingerprint``):
-    - default (production): xxhash64(token), 64 bits.
-    - ``portable=True`` (declared): 60-bit md5-derived token hashes that
-      DuckDB computes identically (('0x'||substr(md5,1,15))::BIGINT), so
-      simhash queries get real value-hash oracles.
+    collect_list on the shuffle. Token hashes are 60-bit md5 prefixes
+    that DuckDB computes identically (('0x'||substr(md5,1,15))::BIGINT),
+    so the simhash queries get real value-hash oracles.
     """
-    if portable:
-        bits = min(bits, PORTABLE_SIMHASH_BITS)
-        th = F.conv(F.substring(F.md5("token"), 1, 15), 16, 10).cast("long")
-    else:
-        th = F.xxhash64("token")
+    th = F.conv(F.substring(F.md5("token"), 1, 15), 16, 10).cast("long")
     tok = documents.select(
         "doc_id", F.explode(tokens("text")).alias("token")
     ).select("doc_id", th.alias("th"))
     # The per-bit vote aggregates and the sign-fold mask are built as
-    # parsed SQL text: `bits` separate Column chains cost ~7 py4j round
-    # trips each (~1.3 s of pure driver time per construction at
-    # bits=60, r14 measurement) for a tree that parses from text in
-    # ~2 ms. Semantics unchanged: vote j = Σ ±1 on bit j of the token
-    # hash, simhash = OR of 1<<j where the vote is positive.
+    # parsed SQL text: 60 separate Column chains cost ~7 py4j round
+    # trips each (~1.3 s of pure driver time per construction, r14
+    # measurement) for a tree that parses from text in ~2 ms.
+    # Semantics unchanged: vote j = Σ ±1 on bit j of the token hash,
+    # simhash = OR of 1<<j where the vote is positive.
     votes = tok.groupBy("doc_id").agg(*[
         F.expr(f"sum(CASE WHEN (shiftright(th, {j}) & 1) = 1 "
                f"THEN 1 ELSE -1 END) AS v{j}")
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     ])
-
-    def mask(j: int) -> str:
-        # bit 63 is the two's-complement sign bit; Long.MinValue has no
-        # direct SQL literal (the parser sees unary minus over an
-        # out-of-range positive), so spell it arithmetically
-        return f"{1 << j}L" if j < 63 else "(-9223372036854775807L - 1L)"
-
     simhash_sql = " | ".join(
-        f"(CASE WHEN v{j} > 0 THEN {mask(j)} ELSE 0L END)"
-        for j in range(bits))
+        f"(CASE WHEN v{j} > 0 THEN {1 << j}L ELSE 0L END)"
+        for j in range(SIMHASH_BITS))
     # One persisted (doc_id, simhash) frame serves simhash_buckets AND
     # simhash_hamming_pairs (and the hamming self-join's two sides): the
-    # 'bits'-aggregate vote pass — the family's dominant cost — runs once
+    # 60-aggregate vote pass — the family's dominant cost — runs once
     # per corpus, not once per consumer.
     return persist_shared(votes.select(
         "doc_id", F.expr(simhash_sql).alias("simhash")))
 
 
-def simhash_buckets(documents: DataFrame, bits: int = 64,
-                    portable: bool = False) -> DataFrame:
-    """SimHash bucket sizes: docs sharing a simhash are near-identical.
-    The declared query runs the portable 60-bit variant (full DuckDB
-    oracle); Hamming-≤k neighbor search is ``simhash_hamming_pairs``."""
-    sigs = simhash_signatures(documents, bits, portable)
+def simhash_buckets(documents: DataFrame) -> DataFrame:
+    """SimHash bucket sizes: docs sharing a simhash are near-identical
+    (full DuckDB oracle); Hamming-≤k neighbor search is
+    ``simhash_hamming_pairs``."""
     return (
-        sigs.groupBy("simhash").agg(
+        simhash_signatures(documents).groupBy("simhash").agg(
             F.count("*").alias("n_docs"),
             F.min("doc_id").alias("min_doc_id"),
         )
         .filter(F.col("n_docs") > 1)
         .orderBy("simhash")
     )
-
-
-def simhash_buckets_portable(documents: DataFrame) -> DataFrame:
-    return simhash_buckets(documents, portable=True)
 
 
 def hamming_block_width(bits: int, max_hamming: int,
@@ -700,14 +678,13 @@ def hamming_block_pairs(sigs: DataFrame, sig_col: str, bits: int,
     )
 
 
-def simhash_hamming_pairs(documents: DataFrame, max_hamming: int = 2,
-                          bits: int = PORTABLE_SIMHASH_BITS,
-                          portable: bool = True) -> DataFrame:
+def simhash_hamming_pairs(documents: DataFrame,
+                          max_hamming: int = 2) -> DataFrame:
     """All doc pairs with SimHash Hamming distance ≤ max_hamming — the
     pigeonhole block join of ``hamming_block_pairs`` over the (shared,
     persisted) simhash signature frame."""
-    sigs = simhash_signatures(documents, bits, portable)
-    return hamming_block_pairs(sigs, "simhash", bits, max_hamming)
+    return hamming_block_pairs(simhash_signatures(documents), "simhash",
+                               SIMHASH_BITS, max_hamming)
 
 
 # ---------------------------------------------------------------------------

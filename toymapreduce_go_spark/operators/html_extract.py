@@ -264,3 +264,41 @@ def rebuild_extracted_documents(pages: DataFrame, flagged: DataFrame,
             .withColumn("text", F.coalesce("text", F.lit("")))
             .withColumn("removed_lines",
                         F.coalesce("removed_lines", F.lit(0))))
+
+
+def extract_container(docs: DataFrame, container: str) -> DataFrame:
+    """The crawl front door the batch pipeline and the streaming ingest
+    share: ``docs`` → (doc_id, source, lang, text) extracted from the
+    named container — ``"html"``, ``"pdf"`` (``operators.pdf_extract``)
+    or ``"warc"`` (``operators.warc_extract``). A frame carrying the
+    container column is consumed directly (the production path); a
+    text-only frame gets the deterministic synthesized-container
+    fixture path first, the multimodal/binary.py convention. Documents
+    whose text extracts empty are dropped. Extraction is deterministic
+    per frame content (the boilerplate threshold is computed within
+    the frame, with the df>=2 floor so a tiny micro-batch is never
+    emptied), so a replayed micro-batch extracts byte-identically."""
+    if container == "html":
+        out = extract_html_documents(
+            docs if "html" in docs.columns else synthesize_html(docs))
+    elif container == "pdf":
+        from .pdf_extract import extract_pdf_documents, synthesize_pdf
+        out = extract_pdf_documents(
+            docs if "pdf" in docs.columns else synthesize_pdf(docs))
+    elif container == "warc":
+        from .warc_extract import (extract_warc_documents,
+                                   synthesize_warc_files)
+        # WARC files carry no document metadata: foreign files land
+        # lang 'und' for the langid stage to re-derive; synthesized
+        # ones get their labels re-attached by doc_id
+        if "warc" in docs.columns:
+            out = extract_warc_documents(docs).withColumn(
+                "lang", F.lit("und"))
+        else:
+            out = extract_warc_documents(
+                synthesize_warc_files(docs)).join(
+                docs.select("doc_id", "lang"), "doc_id")
+    else:
+        raise ValueError(f"unknown container {container!r}: expected "
+                         "'html', 'pdf' or 'warc'")
+    return out.filter(F.length("text") >= 1).drop("removed_lines")

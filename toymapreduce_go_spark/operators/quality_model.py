@@ -24,7 +24,7 @@ reference has no ML surface at all (SURVEY.md §2c).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .textstats import (MIN_ALPHA_RATIO, MIN_CHARS, quality_doc_features,
@@ -34,20 +34,33 @@ FEATURE_COLS = ("n_chars_d", "alpha_ratio", "punct_ratio",
                 "stopword_ratio", "mean_word_len")
 
 
-def gate_labels(documents: DataFrame) -> DataFrame:
-    """Teacher labels: 1 = passes the full curation gate (the same
-    predicate ``pipeline.build_training_corpus`` applies — length +
-    alpha ratio + repetition flags), 0 = dropped."""
+def curation_gate(documents: DataFrame) -> tuple[Column, DataFrame]:
+    """The curation gate, defined once: a document passes when the
+    returned column holds (length + alpha ratio) AND its doc_id is
+    absent from the returned frame (the Gopher repetition flags)."""
     t = F.col("text")
     alpha_ratio = (F.length(F.regexp_replace(t, "[^a-zA-Z]", ""))
                    .cast("double")
                    / F.greatest(F.length(t).cast("double"), F.lit(1.0)))
     basic_ok = (F.length(t) >= MIN_CHARS) & (alpha_ratio >= MIN_ALPHA_RATIO)
     flagged = (repetition_features(documents).filter(repetition_flag())
-               .select("doc_id").withColumn("_flag", F.lit(1)))
+               .select("doc_id"))
+    return basic_ok, flagged
+
+
+def gate_filter(documents: DataFrame) -> DataFrame:
+    """The rows of ``documents`` that pass the curation gate — the
+    batch pipeline's stage 2 and the streaming ingest's gate."""
+    basic_ok, flagged = curation_gate(documents)
+    return documents.filter(basic_ok).join(flagged, "doc_id", "left_anti")
+
+
+def gate_labels(documents: DataFrame) -> DataFrame:
+    """Teacher labels: 1 = passes the curation gate, 0 = dropped."""
+    basic_ok, flagged = curation_gate(documents)
     return (documents.select("doc_id",
                              basic_ok.cast("int").alias("_basic"))
-            .join(flagged, "doc_id", "left")
+            .join(flagged.withColumn("_flag", F.lit(1)), "doc_id", "left")
             .select("doc_id",
                     ((F.col("_basic") == 1)
                      & F.col("_flag").isNull()).cast("double")

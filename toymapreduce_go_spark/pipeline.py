@@ -30,10 +30,11 @@ from pyspark.sql import functions as F
 from .operators.dedup import (apply_near_dedup,
                               contamination_shared_counts,
                               dedup_lines_across_corpus, mask_dup_spans)
+from .operators.html_extract import extract_container
 from .operators.packing import pack_sequences
-from .operators.textstats import (MIN_ALPHA_RATIO, MIN_CHARS,
-                                  ccnet_doc_buckets, pii_redact_text,
-                                  repetition_features, repetition_flag)
+from .operators.quality_model import gate_filter
+from .operators.textstats import (MIN_CHARS, ccnet_doc_buckets,
+                                  pii_redact_text)
 from .sources.registry import load_table
 
 # chunk_long synthetic-id namespace: a long document d's chunk c gets
@@ -58,9 +59,7 @@ def build_training_corpus(spark: SparkSession, sf_dir: str,
                           prior_docs: DataFrame | None = None,
                           near_prior: bool = False,
                           chunk_long: bool = False,
-                          from_html: bool = False,
-                          from_pdf: bool = False,
-                          from_warc: bool = False,
+                          container: str | None = None,
                           blocklist: list[str] | None = None,
                           robots: bool = False,
                           fix_encoding: bool = False,
@@ -107,62 +106,19 @@ def build_training_corpus(spark: SparkSession, sf_dir: str,
         docs = robots_filter_docs(docs)
         stages.append(("0a0b_robots_allowed", docs.count()))
 
-    # 0a (optional). HTML → text extraction: the crawl front door —
-    # tag strip + entity unescape + line-frequency boilerplate removal
-    # (operators/html_extract.py) runs BEFORE any gate, hash, or model
-    # sees a byte, so every downstream stage operates on prose, not
-    # markup. An ``html`` column is consumed directly (the production
-    # path); a text-only frame gets the deterministic synthesized-page
-    # fixture path first, the multimodal/binary.py convention.
-    # localCheckpoint: the extraction embeds a broadcast-subquery
-    # (boilerplate set) — lineage-depth discipline like the other
-    # optional stages.
-    if from_html:
-        from .operators.html_extract import (extract_html_documents,
-                                             synthesize_html)
-        pages = (docs if "html" in docs.columns
-                 else synthesize_html(docs))
-        docs = (extract_html_documents(pages)
-                .filter(F.length("text") >= 1)
-                .drop("removed_lines").localCheckpoint())
-        stages.append(("0a_html_extracted", docs.count()))
-
-    # 0a' (optional). PDF → text extraction: the second container
-    # front door (operators/pdf_extract.py) — same contract as the
-    # HTML stage through the shared line/boilerplate machinery; a
-    # ``pdf`` column is consumed directly, a text-only frame gets the
-    # deterministic synthesized-PDF fixture path.
-    if from_pdf:
-        from .operators.pdf_extract import (extract_pdf_documents,
-                                            synthesize_pdf)
-        pdfs = (docs if "pdf" in docs.columns
-                else synthesize_pdf(docs))
-        docs = (extract_pdf_documents(pdfs)
-                .filter(F.length("text") >= 1)
-                .drop("removed_lines").localCheckpoint())
-        stages.append(("0a_pdf_extracted", docs.count()))
-
-    # 0a3 (optional). WARC → text: the third container front door
-    # (operators/warc_extract.py — record split, header parse, HTTP
-    # strip incl. chunked transfer decoding, then the shared
-    # line/boilerplate machinery). A ``warc`` files column is consumed
-    # directly (the production path — per-file rows with no doc-level
-    # metadata, so lang lands 'und' for the langid stage to re-derive);
-    # a text-only frame gets the deterministic synthesized-WARC fixture
-    # path with its lang labels re-attached by doc_id.
-    if from_warc:
-        from .operators.warc_extract import (extract_warc_documents,
-                                             synthesize_warc_files)
-        if "warc" in docs.columns:
-            extracted = extract_warc_documents(docs).withColumn(
-                "lang", F.lit("und"))
-        else:
-            extracted = extract_warc_documents(
-                synthesize_warc_files(docs)).join(
-                docs.select("doc_id", "lang"), "doc_id")
-        docs = (extracted.filter(F.length("text") >= 1)
-                .drop("removed_lines").localCheckpoint())
-        stages.append(("0a_warc_extracted", docs.count()))
+    # 0a (optional). Container → text extraction, the crawl front door
+    # (operators/html_extract.py:extract_container): HTML (tag strip +
+    # entity unescape + line-frequency boilerplate removal), PDF
+    # (content-stream text + the same boilerplate machinery) or WARC
+    # (record split, header parse, HTTP strip incl. chunked transfer
+    # decoding, then the same machinery) runs BEFORE any gate, hash,
+    # or model sees a byte, so every downstream stage operates on
+    # prose, not markup. localCheckpoint: the extraction embeds a
+    # broadcast-subquery (boilerplate set) — lineage-depth discipline
+    # like the other optional stages.
+    if container is not None:
+        docs = extract_container(docs, container).localCheckpoint()
+        stages.append((f"0a_{container}_extracted", docs.count()))
 
     # 0a'' (optional). Encoding repair (operators/textfix.py): the
     # ftfy pass — the utf-8-as-cp1252 mojibake inverse map + newline
@@ -205,20 +161,13 @@ def build_training_corpus(spark: SparkSession, sf_dir: str,
     red = pii_redact_text(docs)
 
     # 2. quality gates: curation thresholds + repetition flags
-    t = F.col("text")
-    alpha_ratio = (F.length(F.regexp_replace(t, "[^a-zA-Z]", ""))
-                   .cast("double")
-                   / F.greatest(F.length(t).cast("double"), F.lit(1.0)))
-    basic_ok = (F.length(t) >= MIN_CHARS) & (alpha_ratio >= MIN_ALPHA_RATIO)
-    rep_flagged = (repetition_features(red).filter(repetition_flag())
-                   .select("doc_id"))
-    # each stage is persisted: the funnel counts AND every downstream
+    # (quality_model.gate_filter, the streaming ingest's gate too).
+    # Each stage is persisted: the funnel counts AND every downstream
     # stage re-reference it, and without a materialization Spark would
     # re-run the full upstream chain per reference (measured 3.1x decade
     # growth from exactly that; 2.0x with persists). A production run
     # would checkpoint stage outputs to the lake instead.
-    gated = (red.filter(basic_ok)
-             .join(rep_flagged, "doc_id", "left_anti")).persist()
+    gated = gate_filter(red).persist()
     stages.append(("1_quality_gated", gated.count()))
 
     # 2b (optional). CCNet LM gate: train the corpus unigram LM on the

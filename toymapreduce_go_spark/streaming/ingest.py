@@ -36,7 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from toymapreduce_go_spark.operators.dedup import N_BANDS, N_HASHES
-from toymapreduce_go_spark.operators.quality_model import gate_labels
+from toymapreduce_go_spark.operators.html_extract import extract_container
+from toymapreduce_go_spark.operators.quality_model import gate_filter
 from toymapreduce_go_spark.streaming.dedup_stream import (
     near_dedup_batch_step, read_survivors)
 from toymapreduce_go_spark.streaming.quality_stream import (
@@ -47,64 +48,27 @@ __all__ = ["ingest_batch_step", "run_curation_ingest", "read_survivors",
            "read_telemetry"]
 
 
-def gate_filter(batch: DataFrame) -> DataFrame:
-    """Batch rows passing the full curation gate (the same
-    ``gate_labels`` predicate the batch pipeline and the distilled
-    quality model train against)."""
-    keep = gate_labels(batch).filter("label = 1.0").select("doc_id")
-    return batch.join(keep, "doc_id", "left_semi")
-
-
 def ingest_batch_step(spark: SparkSession, batch_df: DataFrame,
                       batch_id: int, state_dir: str, n: int = 3,
                       n_hashes: int = N_HASHES, n_bands: int = N_BANDS,
                       threshold: float | None = 0.5,
-                      from_html: bool = False,
-                      from_pdf: bool = False,
-                      from_warc: bool = False,
+                      container: str | None = None,
                       fix_encoding: bool = False) -> None:
     """One composed ``foreachBatch`` step: telemetry on the raw batch,
     then gate-filter, then the incremental near-dedup step. Replaying
     the same (batch rows, batch_id) is a byte-identical no-op for every
     partition both sub-steps own.
 
-    ``from_html`` puts the batch pipeline's crawl front stage
-    (``operators.html_extract``) ahead of everything — arriving pages
-    are extracted to prose BEFORE telemetry, gate, or dedup see a byte.
-    Extraction is deterministic per batch content (the boilerplate
-    threshold is computed WITHIN the batch, mirroring the batch
-    pipeline's per-corpus computation — with the df>=2 floor so a tiny
-    micro-batch is never emptied), so replay stays byte-identical and
-    the composed exactly-once contract is untouched. ``from_pdf`` is
-    the PDF-container twin (``operators.pdf_extract``), r11;
-    ``from_warc`` the WARC twin (``operators.warc_extract`` — the
-    batch's pages ride one synthesized per-source WARC file each
-    micro-batch, parsed back record-split + chunked-decode), r12."""
+    ``container`` (``"html"``, ``"pdf"`` or ``"warc"``) puts the batch
+    pipeline's crawl front stage
+    (``operators.html_extract.extract_container``) ahead of everything
+    — arriving pages are extracted to prose BEFORE telemetry, gate, or
+    dedup see a byte. Extraction is deterministic per batch content,
+    so replay stays byte-identical and the composed exactly-once
+    contract is untouched."""
+    if container is not None:
+        batch_df = extract_container(batch_df, container)
     batch = batch_df.select("doc_id", "source", "text")
-    if from_html:
-        from ..operators.html_extract import (extract_html_documents,
-                                              synthesize_html)
-        pages = (batch_df if "html" in batch_df.columns
-                 else synthesize_html(batch))
-        batch = (extract_html_documents(pages)
-                 .filter("length(text) >= 1")
-                 .select("doc_id", "source", "text"))
-    elif from_pdf:
-        from ..operators.pdf_extract import (extract_pdf_documents,
-                                             synthesize_pdf)
-        pdfs = (batch_df if "pdf" in batch_df.columns
-                else synthesize_pdf(batch))
-        batch = (extract_pdf_documents(pdfs)
-                 .filter("length(text) >= 1")
-                 .select("doc_id", "source", "text"))
-    elif from_warc:
-        from ..operators.warc_extract import (extract_warc_documents,
-                                              synthesize_warc_files)
-        files = (batch_df if "warc" in batch_df.columns
-                 else synthesize_warc_files(batch))
-        batch = (extract_warc_documents(files)
-                 .filter("length(text) >= 1")
-                 .select("doc_id", "source", "text"))
     if fix_encoding:
         # the batch pipeline's 0d stage: scan-side mojibake inverse
         # map + C0 strip BEFORE telemetry/gate/dedup hash anything; a
@@ -124,22 +88,17 @@ def run_curation_ingest(documents_stream: DataFrame, state_dir: str,
                         n_hashes: int = N_HASHES, n_bands: int = N_BANDS,
                         threshold: float | None = 0.5,
                         timeout: int = 240,
-                        from_html: bool = False,
-                        from_pdf: bool = False,
-                        from_warc: bool = False,
+                        container: str | None = None,
                         fix_encoding: bool = False):
     """Drive the composed ingest over all currently-available input
     (availableNow; production leaves the query running). ONE checkpoint
     under ``state_dir`` governs both tiers, so a crash-restart replays
     the last uncommitted batch through BOTH idempotent steps.
-    ``from_html`` / ``from_pdf`` / ``from_warc`` prepend the matching
-    container
-    extraction front stage."""
+    ``container`` prepends the matching extraction front stage."""
     def step(batch_df: DataFrame, batch_id: int) -> None:
         ingest_batch_step(spark, batch_df, batch_id, state_dir, n=n,
                           n_hashes=n_hashes, n_bands=n_bands,
-                          threshold=threshold, from_html=from_html,
-                          from_pdf=from_pdf, from_warc=from_warc,
+                          threshold=threshold, container=container,
                           fix_encoding=fix_encoding)
 
     return run_available_now(documents_stream, state_dir, step, timeout)
