@@ -749,7 +749,7 @@ def test_vs_index_manifest_fails_closed_on_mismatch(spark, tmp_path):
 def test_index_compaction_preserves_snapshots_and_retention_expires(
         spark, tmp_path):
     """Index maintenance: compact_prior_index rewrites bands/sigs to
-    fewer files while preserving the ingest_batch layout — probes at
+    fewer files while preserving the batch_id layout — probes at
     EVERY before_batch snapshot return byte-identical results, and a
     post-compaction extension behaves exactly as on the uncompacted
     twin. expire_index_batches then drops old partitions: a probe sees
@@ -810,9 +810,9 @@ def test_index_compaction_preserves_snapshots_and_retention_expires(
     # retention: expire batches < 2 -> only batch-2 content remains
     removed = expire_index_batches(path, keep_from=2)
     assert removed == 4  # 2 batches x (bands, sigs)
-    left = {r.ingest_batch for r in
+    left = {r.batch_id for r in
             spark.read.parquet(f"{path}/bands")
-            .select("ingest_batch").distinct().collect()}
+            .select("batch_id").distinct().collect()}
     assert left == {2}
     post = sorted(tuple(r) for r in near_dedup_vs_index(
         probe, path, before_batch=3).collect())

@@ -38,7 +38,8 @@ def test_survivors_have_no_verified_near_dup_pair(spark, stream_state):
     assert near_dedup_minhash(surv_docs, threshold=0.5).count() == 0
 
 
-def test_candidate_rule_mode_is_bucket_independent(spark, tmp_path):
+def test_candidate_rule_mode_is_bucket_independent(spark, stream_state,
+                                                   tmp_path):
     """threshold=None selects the candidate-rule-only (more aggressive)
     mode: after the run no two accepted documents share ANY LSH band
     bucket — within a batch the min-doc_id rule forbids it, across
@@ -55,11 +56,8 @@ def test_candidate_rule_mode_is_bucket_independent(spark, tmp_path):
     assert clashes == 0
     # verification only ever KEEPS more: candidate-rule survivors are a
     # subset of the verified tier's
-    verified_state = str(tmp_path / "ver_state")
-    run_near_dedup_stream(read_documents_stream(spark, SF_DIR, n_splits=3),
-                          verified_state, spark)
     ver_ids = {r["doc_id"] for r in
-               read_survivors(spark, verified_state).collect()}
+               read_survivors(spark, stream_state).collect()}
     cand_ids = {r["doc_id"] for r in surv.collect()}
     assert cand_ids <= ver_ids
 
@@ -243,17 +241,14 @@ def test_state_reader_on_empty_state(spark, tmp_path, reader):
 
 def _dedup_state(spark, state):
     """Sorted rows of the dedup tier's survivors and both state tables."""
-    from toymapreduce_go_spark.streaming.dedup_stream import (_BANDS_SCHEMA,
-                                                              _SIGS_SCHEMA)
-    from toymapreduce_go_spark.streaming.run import read_batches
+    from toymapreduce_go_spark.operators.dedup import read_index
 
+    bands, sigs = read_index(spark, state, band_rows, before=None)
     return {
         "survivors": sorted(tuple(r) for r in
                             read_survivors(spark, state).collect()),
-        "sigs": sorted(tuple(r) for r in read_batches(
-            spark, f"{state}/sigs", _SIGS_SCHEMA).collect()),
-        "bands": sorted(tuple(r) for r in read_batches(
-            spark, f"{state}/bands", _BANDS_SCHEMA).collect()),
+        "sigs": sorted(tuple(r) for r in sigs.collect()),
+        "bands": sorted(tuple(r) for r in bands.collect()),
     }
 
 
@@ -265,7 +260,7 @@ def test_crash_between_sigs_and_bands_commits_replays_exactly_once(
     rows) while its band rows are not; a restart from the same
     checkpoint replays batch 1 and lands survivors, sigs and bands equal
     to an uninterrupted run."""
-    import toymapreduce_go_spark.streaming.dedup_stream as dedup_mod
+    import toymapreduce_go_spark.operators.dedup as dedup_mod
 
     real_commit = dedup_mod.commit_batch
     fired = []
@@ -303,6 +298,31 @@ def test_torn_state_fails_closed(spark, tmp_path):
     shutil.rmtree(os.path.join(state, "sigs"))
     with pytest.raises(Exception, match="torn state"):
         near_dedup_batch_step(spark, docs, 1, state)
+
+    # the persisted batch index probes through the same guard
+    from toymapreduce_go_spark.operators.dedup import (
+        near_dedup_vs_index, write_prior_index)
+
+    index = str(tmp_path / "torn_index")
+    write_prior_index(docs.filter("doc_id % 2 = 0"), index, batch_id=0)
+    write_prior_index(docs.filter("doc_id % 2 = 1"), index, batch_id=1)
+    shutil.rmtree(os.path.join(index, "sigs", "batch_id=1"))
+    with pytest.raises(Exception, match="torn state"):
+        near_dedup_vs_index(docs, index).collect()
+
+
+def test_restart_with_other_banding_fails_on_the_manifest(spark,
+                                                         stream_state):
+    """A state dir built with the default banding, restarted with other
+    (n_hashes, n_bands): its band keys would collide with nothing, so
+    every duplicate would be silently accepted. Both stream entry points
+    refuse before the stream starts."""
+    from toymapreduce_go_spark.streaming.ingest import run_curation_ingest
+
+    for run in (run_near_dedup_stream, run_curation_ingest):
+        with pytest.raises(ValueError, match="manifest"):
+            run(read_documents_stream(spark, SF_DIR, n_splits=3),
+                stream_state, spark, n_hashes=32, n_bands=8)
 
 
 def _telemetry_multiset(spark, state):

@@ -34,10 +34,10 @@ def _content(spark, path):
     """Index content WITHOUT the batch-layout column — retraction must
     preserve exact per-doc rows however batches were laid out."""
     bands = sorted(tuple(r) for r in spark.read.parquet(f"{path}/bands")
-                   .select("band_id", "band_hash", "prior_id").collect())
-    sigs = sorted((int(r["prior_id"]), tuple(r["sig"])) for r in
+                   .select("band_id", "band_hash", "doc_id").collect())
+    sigs = sorted((int(r["doc_id"]), tuple(r["sig"])) for r in
                   spark.read.parquet(f"{path}/sigs")
-                  .select("prior_id", "sig").collect())
+                  .select("doc_id", "sig").collect())
     return bands, sigs
 
 

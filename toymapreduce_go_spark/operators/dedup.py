@@ -19,6 +19,8 @@ output.
 
 from __future__ import annotations
 
+import json
+import os
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame
@@ -26,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import tokens
+from ..streaming.run import commit_batch, read_batches
 
 # ---------------------------------------------------------------------------
 # Shared persisted stages.
@@ -383,9 +386,10 @@ def portable_band_rows(sig: DataFrame, n_hashes: int = N_HASHES,
     the form the DuckDB oracle replays with ``array_to_string`` —
     collision-free by construction (the production ``band_rows`` hashes
     to 8 bytes instead to keep the bucket-join shuffle narrow). The ONE
-    definition shared by ``minhash_band_pairs(portable=True)``,
-    ``prior_band_index``, and ``near_dedup_vs_prior``, so the banding
-    stays bit-identical across all three and the generated oracles."""
+    definition shared by ``minhash_band_pairs(portable=True)`` and the
+    archive band index (``prior_band_index``, ``write_prior_index``,
+    ``near_dedup_vs_index``), so the banding stays bit-identical across
+    all of them and the generated oracles."""
     rows_per_band = n_hashes // n_bands
 
     def band_key_sql(b: int) -> str:
@@ -1495,15 +1499,137 @@ def apply_near_dedup(documents: DataFrame, n: int = 3,
 
 
 # ---------------------------------------------------------------------------
-# 11. Incremental batch near-dedup against a prior archive
+# 11. The persisted MinHash band index, and incremental near-dedup on it
 #
-# The batch twin of streaming/dedup_stream.py: "which of today's crawl
-# documents are near-duplicates of ANYTHING already in the archive" —
-# without ever re-shuffling the archive's corpus. The reference's closest
-# surface is re-running its whole wordcount-style job over old+new input
-# together (mrapps have no incremental form; cmd/mrcoordinator/main.go
-# takes a fixed file list); here the archive participates only through
-# its band INDEX.
+# "Which of today's documents are near-duplicates of ANYTHING already
+# accepted" — without re-shuffling the accepted corpus, which takes part
+# only through its band INDEX (the reference re-runs its whole job over
+# old+new input: cmd/mrcoordinator/main.go takes a fixed file list). One
+# index serves both tiers — the batch archive (``write_prior_index``,
+# portable band family, oracle-checked via ``near_dedup_vs_prior``) and
+# the streaming dedup state (``streaming/dedup_stream.py``, xxhash band
+# family) — as ``streaming/run.py`` state tables partitioned by batch_id:
+#   {path}/sigs           (doc_id, source, sig)
+#   {path}/bands          (doc_id, band_id, band_hash of the band fn's type)
+#   {path}/manifest.json  {"n", "n_hashes", "n_bands"}
+# A commit overwrites only its own ``batch_id=<N>`` partitions, sigs
+# BEFORE bands, so a rerun rewrites them byte-for-byte and a crash in
+# between leaves sigs-without-bands, never bands-without-sigs. A probe
+# reads only batches ``< N`` and fails closed on a band row whose
+# signature is missing instead of reading it as no match.
+
+SIGS_SCHEMA = ("doc_id bigint, source string, sig array<bigint>, "
+               "batch_id int")
+
+
+def _local(path: str) -> str:
+    return path[len("file://"):] if path.startswith("file://") else path
+
+
+def check_index_manifest(path: str, n: int, n_hashes: int, n_bands: int,
+                         what: str) -> bool:
+    """Validate (n, n_hashes, n_bands) against the index manifest at
+    ``path``; return whether one exists. A mismatch must be LOUD:
+    probing an n_hashes=32 index with n_hashes=64 band keys silently
+    returns zero matches — every near-duplicate missed, no error. The
+    manifest is a local file read, never a Spark job."""
+    try:
+        with open(os.path.join(_local(path), "manifest.json")) as f:
+            meta = json.load(f)
+    except FileNotFoundError:
+        return False
+    if meta != {"n": n, "n_hashes": n_hashes, "n_bands": n_bands}:
+        raise ValueError(
+            f"{what} with (n={n}, n_hashes={n_hashes}, "
+            f"n_bands={n_bands}) does not match the index manifest at "
+            f"{path}: {meta} — mismatched banding silently finds "
+            f"nothing, so this fails closed")
+    return True
+
+
+def commit_index_batch(sig: DataFrame, band_fn, path: str, batch_id: int,
+                       n: int, n_hashes: int, n_bands: int) -> None:
+    """Commit ``sig`` (doc_id, source, sig) as batch ``batch_id`` of the
+    index at ``path``: the manifest on the first commit, then the sigs
+    partition, then band rows (``band_fn``) derived from the COMMITTED
+    sig partition. The sigs commit drops every cached plan that reads
+    sigs/, so deriving the bands from ``sig``'s own plan would re-run
+    whatever chain produced it (a stream step's whole probe)."""
+    manifest = os.path.join(_local(path), "manifest.json")
+    if not os.path.exists(manifest):
+        os.makedirs(_local(path), exist_ok=True)
+        with open(manifest + ".writing", "w") as f:
+            json.dump({"n": n, "n_hashes": n_hashes, "n_bands": n_bands}, f)
+        os.replace(manifest + ".writing", manifest)
+    sigs_path = os.path.join(path, "sigs")
+    commit_batch(sig.select("doc_id", "source", "sig"), sigs_path, batch_id)
+    committed = (read_batches(sig.sparkSession, sigs_path, SIGS_SCHEMA)
+                 .filter(F.col("batch_id") == batch_id))
+    commit_batch(band_fn(committed, n_hashes, n_bands),
+                 os.path.join(path, "bands"), batch_id)
+
+
+def read_index(spark, path: str, band_fn, before: int | None
+               ) -> tuple[DataFrame, DataFrame]:
+    """(bands, sigs) of the index at ``path``, read through
+    ``read_batches`` with declared schemas — band_hash typed as
+    ``band_fn`` emits it — empty when nothing is committed, and only
+    batches ``< before`` unless it is None."""
+    sigs = read_batches(spark, os.path.join(path, "sigs"), SIGS_SCHEMA,
+                        before)
+    schema = ", ".join(f"{c} {t}" for c, t in band_fn(sigs).dtypes)
+    return (read_batches(spark, os.path.join(path, "bands"),
+                         f"{schema}, batch_id int", before), sigs)
+
+
+def _verified_matches(bands: DataFrame, sig: DataFrame,
+                      idx_bands: DataFrame, idx_sigs: DataFrame,
+                      n_hashes: int, threshold: float | None) -> DataFrame:
+    """The verify core: probe band rows ``bands`` (doc_id, band_id,
+    band_hash) bucket-joined against index band rows ``idx_bands``, each
+    distinct (doc_id, prior_id) candidate kept iff its estimated Jaccard
+    (``est_jaccard_expr``) against the index signature is ≥
+    ``threshold``. Signatures re-attach from the per-doc tables
+    (corpus-sized, not pair-sized) — band rows never carry the 64-long
+    array through the bucket join. ``threshold=None`` returns the
+    unverified (doc_id, prior_id) candidates."""
+    cand = (bands.join(idx_bands.select("band_id", "band_hash",
+                                        F.col("doc_id").alias("prior_id")),
+                       ["band_id", "band_hash"])
+            .select("doc_id", "prior_id")
+            .dropDuplicates(["doc_id", "prior_id"]))
+    if threshold is None:
+        return cand
+    # k/n_hashes with n_hashes a power of two is an exact dyadic double
+    # (near_dedup_minhash's portable convention) — no rounding, the
+    # DuckDB value-hash compares raw doubles.
+    est = F.when(F.col("sig_a").isNull(), F.raise_error(F.lit(
+        "torn state: an indexed doc has no signature"))).otherwise(
+        est_jaccard_expr("sig_a", "sig_b", n_hashes))
+    return (cand
+            .join(idx_sigs.select(F.col("doc_id").alias("prior_id"),
+                                  F.col("sig").alias("sig_a")),
+                  "prior_id", "left")
+            .join(sig.select("doc_id", F.col("sig").alias("sig_b")),
+                  "doc_id")
+            .withColumn("est_jaccard", est)
+            .filter(F.col("est_jaccard") >= threshold)
+            .select("doc_id", "prior_id", "est_jaccard"))
+
+
+def probe_index(path: str, sig: DataFrame, band_fn, n_hashes: int,
+                n_bands: int, threshold: float | None,
+                before: int | None) -> DataFrame:
+    """Matches (doc_id, prior_id, est_jaccard) of the signatures ``sig``
+    (doc_id, sig) against the index at ``path`` (``_verified_matches``
+    over ``read_index``), banded by the index's own ``band_fn``.
+    ``before`` = the batch id about to be committed: the result is LAZY,
+    and a re-evaluation after that commit would otherwise see the
+    probing batch's own rows, which self-match at est 1.0."""
+    idx_bands, idx_sigs = read_index(sig.sparkSession, path, band_fn,
+                                     before)
+    return _verified_matches(band_fn(sig, n_hashes, n_bands), sig,
+                             idx_bands, idx_sigs, n_hashes, threshold)
 
 
 def prior_band_index(prior: DataFrame, n: int = 3,
@@ -1511,27 +1637,23 @@ def prior_band_index(prior: DataFrame, n: int = 3,
                      n_bands: int = N_BANDS,
                      max_bucket_size: int | None = None
                      ) -> tuple[DataFrame, DataFrame]:
-    """(band_index, sigs) for an archive corpus — the portable-MinHash
-    band rows ``(band_id, band_hash, prior_id)`` plus the per-doc
-    signature table. In production BOTH are parquet tables written ONCE
-    when a snapshot is ingested (the band index bucketed by
-    ``(band_id, band_hash)``, the sig table by doc_id) and only READ by
-    every later batch — the archive's raw text never participates in an
-    incremental run. Here they are derived frames over the fixture so the
-    DuckDB oracle can replay the whole construction.
+    """(bands, sigs) for an archive corpus as DERIVED frames in the
+    index's row format — portable-MinHash band rows ``(doc_id, band_id,
+    band_hash)`` plus the per-doc ``(doc_id, sig)`` table — so the
+    DuckDB oracle can replay the whole construction
+    (``write_prior_index`` persists the same rows).
 
     ``max_bucket_size`` caps each (band_id, band_hash) bucket at its
-    lowest prior_ids, bounding a hot bucket's probe fan-out (a giant
+    lowest doc_ids, bounding a hot bucket's probe fan-out (a giant
     identical-boilerplate cluster in the archive). Screen recall is
     preserved for exactly that hot case — identical docs have identical
     signatures, so any kept representative verifies in the kept member's
     place; a MIXED over-full bucket can lose the one true near-dup, so
     the cap is off by default and the declared query runs uncapped."""
     sig = persist_shared(minhash_signatures_portable(prior, n, n_hashes))
-    idx = portable_band_rows(sig, n_hashes, n_bands).select(
-        "band_id", "band_hash", F.col("doc_id").alias("prior_id"))
+    idx = portable_band_rows(sig, n_hashes, n_bands)
     if max_bucket_size is not None:
-        wb = Window.partitionBy("band_id", "band_hash").orderBy("prior_id")
+        wb = Window.partitionBy("band_id", "band_hash").orderBy("doc_id")
         idx = (idx.withColumn("_bn", F.row_number().over(wb))
                .filter(F.col("_bn") <= max_bucket_size).drop("_bn"))
     return idx, sig
@@ -1546,16 +1668,16 @@ def near_dedup_vs_prior(batch: DataFrame, prior: DataFrame, n: int = 3,
     BATCH corpus and a PRIOR archive: portable MinHash signatures on the
     batch (scan-side projection, see ``minhash_signatures_portable``),
     band rows joined against the archive's band index, estimated Jaccard
-    (fraction of agreeing minhashes — ``est_jaccard_expr``, the same
-    verification the streaming tier applies) kept at ≥ ``threshold``.
+    kept at ≥ ``threshold`` — the index's verify core over derived
+    frames (``prior_band_index``).
 
     100 TB shape — why this is the incremental-ingest path:
-    - The archive contributes ONLY its band index and sig table
-      (``prior_band_index``), both ~0.5 KB/doc metadata written once at
-      snapshot time. A day's incremental run shuffles the BATCH's band
-      rows (batch-sized) into a join against the stored index; the
-      archive corpus itself is never re-scanned, re-hashed, or
-      re-shuffled. Cost per batch is O(batch × bands) + index probe —
+    - The archive contributes ONLY its band index and sig table, both
+      ~0.5 KB/doc metadata written once at snapshot time
+      (``write_prior_index``). A day's incremental run shuffles the
+      BATCH's band rows (batch-sized) into a join against the stored
+      index; the archive corpus itself is never re-scanned, re-hashed,
+      or re-shuffled. Cost per batch is O(batch × bands) + index probe —
       independent of how many batches came before, the same property
       the streaming tier measures (SCALE.md, sf1 growing-index run).
     - Batch-vs-batch duplicates are a separate ``near_dedup_minhash``
@@ -1568,116 +1690,30 @@ def near_dedup_vs_prior(batch: DataFrame, prior: DataFrame, n: int = 3,
       ``prior_band_index``) caps the index side if even that linear
       fan-out needs bounding.
     """
-    bidx, psig = prior_band_index(prior, n, n_hashes, n_bands,
-                                  max_bucket_size)
-    return _probe_band_index(
-        batch, bidx,
-        psig.select(F.col("doc_id").alias("prior_id"), "sig"),
-        n, threshold, n_hashes, n_bands)
-
-
-def _probe_band_index(batch: DataFrame, bidx: DataFrame, psig: DataFrame,
-                      n: int, threshold: float, n_hashes: int,
-                      n_bands: int) -> DataFrame:
-    """The probe core shared by ``near_dedup_vs_prior`` (derived-frame
-    index) and ``near_dedup_vs_index`` (parquet-persisted index):
-    ``bidx`` is (band_id, band_hash, prior_id) band rows, ``psig`` is
-    the (prior_id, sig) signature table."""
+    bands, sigs = prior_band_index(prior, n, n_hashes, n_bands,
+                                   max_bucket_size)
     bsig = persist_shared(minhash_signatures_portable(batch, n, n_hashes))
-    probe = portable_band_rows(bsig, n_hashes, n_bands)
-    cand = (probe.join(bidx, ["band_id", "band_hash"])
-            .select("doc_id", "prior_id")
-            .dropDuplicates(["doc_id", "prior_id"]))
-    # Signatures re-attach from the per-doc tables (corpus-sized, not
-    # pair-sized) — band rows never carry the 64-long array through the
-    # bucket join, the same discipline as minhash_band_pairs.
-    cand = (cand
-            .join(psig.select("prior_id", F.col("sig").alias("sig_a")),
-                  "prior_id")
-            .join(bsig.select("doc_id", F.col("sig").alias("sig_b")),
-                  "doc_id"))
-    # k/n_hashes with n_hashes a power of two is an exact dyadic double
-    # (near_dedup_minhash's portable convention) — no rounding, the
-    # DuckDB value-hash compares raw doubles.
-    est = est_jaccard_expr("sig_a", "sig_b", n_hashes)
-    return (cand.withColumn("est_jaccard", est)
-            .filter(F.col("est_jaccard") >= threshold)
-            .select("doc_id", "prior_id", "est_jaccard")
+    return (_verified_matches(portable_band_rows(bsig, n_hashes, n_bands),
+                              bsig, bands, sigs, n_hashes, threshold)
             .orderBy("doc_id", "prior_id"))
-
-
-def _read_index_meta(spark, path: str) -> dict | None:
-    """The index's parameter manifest, or None if absent (pre-manifest
-    indexes / first write). A manifest mismatch must be LOUD: probing
-    an n_hashes=32 index with n_hashes=64 band keys silently returns
-    zero matches — every near-duplicate missed, no error."""
-    from pyspark.errors import AnalysisException
-    try:
-        rows = spark.read.parquet(f"{path}/meta").collect()
-    except AnalysisException:
-        return None
-    if not rows:
-        # meta dir exists but is empty — a crash between the partition
-        # writes and the meta commit; degrade to the pre-manifest path
-        # (same as absent) instead of an unrelated IndexError
-        return None
-    row = rows[0]
-    return {"n": int(row["n"]), "n_hashes": int(row["n_hashes"]),
-            "n_bands": int(row["n_bands"])}
-
-
-def _check_index_meta(spark, path: str, n: int, n_hashes: int,
-                      n_bands: int, what: str) -> None:
-    meta = _read_index_meta(spark, path)
-    if meta is not None and meta != {"n": n, "n_hashes": n_hashes,
-                                     "n_bands": n_bands}:
-        raise ValueError(
-            f"{what} with (n={n}, n_hashes={n_hashes}, "
-            f"n_bands={n_bands}) does not match the index manifest at "
-            f"{path}: {meta} — mismatched banding silently finds "
-            f"nothing, so this fails closed")
 
 
 def write_prior_index(docs: DataFrame, path: str, batch_id: int = 0,
                       n: int = 3, n_hashes: int = N_HASHES,
-                      n_bands: int = N_BANDS,
-                      max_bucket_size: int | None = None) -> None:
-    """Materialize the archive index ``near_dedup_vs_index`` probes:
-    ``{path}/bands`` (band_id, band_hash, prior_id) and ``{path}/sigs``
-    (prior_id, sig), both partitioned by ``ingest_batch``. This is the
-    "written ONCE at snapshot time" half of the incremental contract —
-    call it with ``batch_id=0`` for the initial archive, then again with
-    a fresh ``batch_id`` per ingested batch's NEW survivors (docs that
-    passed the screen — by construction disjoint from what the index
-    already holds, so extensions never duplicate a key).
-
-    Exactly-once: content per partition is deterministic and the write
-    is a dynamic-partition overwrite of ONLY ``ingest_batch=<id>`` (the
-    streaming tier's convention, ``streaming/dedup_stream.py``), so a
-    crashed-and-rerun extension replaces its own partition byte-for-byte
-    and never touches earlier snapshots. At 100 TB, bucket ``bands`` by
-    band_hash at write time so every later probe join is co-located.
-
-    A one-row ``{path}/meta`` manifest records (n, n_hashes, n_bands);
-    extensions and probes validate against it and fail closed on a
-    mismatch (mismatched banding joins to nothing — silent total
-    recall loss otherwise). ``max_bucket_size`` caps hot buckets at
-    write time (see ``prior_band_index`` for the recall contract)."""
-    spark = docs.sparkSession
-    _check_index_meta(spark, path, n, n_hashes, n_bands,
-                      "write_prior_index")
-    idx, sig = prior_band_index(docs, n, n_hashes, n_bands,
-                                max_bucket_size)
-    for frame, sub in ((sig.select(F.col("doc_id").alias("prior_id"),
-                                   "sig"), "sigs"),
-                       (idx, "bands")):
-        (frame.withColumn("ingest_batch", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("ingest_batch").parquet(f"{path}/{sub}"))
-    (spark.createDataFrame([(n, n_hashes, n_bands)],
-                           "n int, n_hashes int, n_bands int")
-     .coalesce(1).write.mode("overwrite").parquet(f"{path}/meta"))
+                      n_bands: int = N_BANDS) -> None:
+    """Commit ``docs`` (doc_id, source, text) as batch ``batch_id`` of
+    the archive index ``near_dedup_vs_index`` probes — the "written ONCE
+    at snapshot time" half of the incremental contract: ``batch_id=0``
+    for the initial archive, then a fresh ``batch_id`` per ingested
+    batch's NEW survivors (disjoint from what the index already holds).
+    A rerun replaces its own partitions byte-for-byte; parameters that
+    mismatch the manifest fail closed. At 100 TB, bucket ``bands`` by
+    band_hash at write time so every later probe join is co-located."""
+    check_index_manifest(path, n, n_hashes, n_bands, "write_prior_index")
+    sig = (minhash_signatures_portable(docs, n, n_hashes)
+           .join(docs.select("doc_id", "source"), "doc_id"))
+    commit_index_batch(sig, portable_band_rows, path, batch_id, n,
+                       n_hashes, n_bands)
 
 
 def near_dedup_vs_index(batch: DataFrame, path: str,
@@ -1685,55 +1721,39 @@ def near_dedup_vs_index(batch: DataFrame, path: str,
                         n_hashes: int = N_HASHES,
                         n_bands: int = N_BANDS,
                         before_batch: int | None = None) -> DataFrame:
-    """``near_dedup_vs_prior`` against a parquet-persisted index
+    """``near_dedup_vs_prior`` against a persisted index
     (``write_prior_index``): the archive contributes ONLY stored band
     rows and signatures — its corpus is not even an argument. This is
     the operator a daily ingest actually runs; the derived-frame form
     exists so the fixture oracle can replay the whole construction.
 
-    ``before_batch`` restricts the probe to index partitions with
-    ``ingest_batch < before_batch`` — ALWAYS pass it (= the batch id
-    about to be written) when the same job later extends the index:
-    the returned frame is LAZY, and a re-evaluation after the
-    extension would otherwise see the new partition — including the
-    probing batch's own survivors, which self-match at est 1.0 and
-    silently flag everything (measured, not hypothetical). This is the
-    streaming tier's ``batch_id < N`` state-read contract
-    (``streaming/run.py:read_batches``) in batch form;
-    the partition filter prunes at the file listing, so old probes
-    also never pay for newer snapshots.
-
-    Probe parameters are validated against the index's manifest — a
-    mismatched banding joins to NOTHING (silent total recall loss), so
-    this fails closed instead."""
-    spark = batch.sparkSession
-    _check_index_meta(spark, path, n, n_hashes, n_bands,
-                      "near_dedup_vs_index")
-    bands = spark.read.parquet(f"{path}/bands")
-    sigs = spark.read.parquet(f"{path}/sigs")
-    if before_batch is not None:
-        bands = bands.filter(F.col("ingest_batch") < before_batch)
-        sigs = sigs.filter(F.col("ingest_batch") < before_batch)
-    return _probe_band_index(
-        batch, bands.select("band_id", "band_hash", "prior_id"),
-        sigs.select("prior_id", "sig"), n, threshold, n_hashes, n_bands)
+    ``before_batch`` restricts the probe to batches ``< before_batch``
+    — ALWAYS pass it when the same job later extends the index (see
+    ``probe_index``; measured, not hypothetical). The partition filter
+    prunes at the file listing, so old probes never pay for newer
+    snapshots. Probe parameters are validated against the manifest."""
+    if not check_index_manifest(path, n, n_hashes, n_bands,
+                                "near_dedup_vs_index"):
+        raise FileNotFoundError(f"near_dedup_vs_index: no index at {path}")
+    bsig = persist_shared(minhash_signatures_portable(batch, n, n_hashes))
+    return (probe_index(path, bsig, portable_band_rows, n_hashes, n_bands,
+                        threshold, before_batch)
+            .orderBy("doc_id", "prior_id"))
 
 
 def compact_prior_index(spark, path: str,
                         target_mb: int = 128) -> dict[str, tuple[int, int]]:
-    """Index maintenance: ``write_prior_index`` appends one
-    ``ingest_batch=<id>`` partition per ingested batch forever, and each
-    extension commit leaves one file per write task — after months of
-    daily ingests the probe's file LISTING (not the data) becomes the
-    bottleneck. This rewrites ``{path}/bands`` and ``{path}/sigs``
-    through ``sources.sinks.compact_parquet``, which preserves the
-    hive ``ingest_batch=`` layout (rows are hash-repartitioned ON the
-    partition column, so every batch still compacts to its own
+    """Index maintenance: every commit adds one ``batch_id=<id>``
+    partition per table forever, and each leaves one file per write
+    task — after months of daily ingests the probe's file LISTING (not
+    the data) becomes the bottleneck. This rewrites ``{path}/bands`` and
+    ``{path}/sigs`` through ``sources.sinks.compact_parquet``, which
+    preserves the hive ``batch_id=`` layout (rows are hash-repartitioned
+    ON the partition column, so every batch still compacts to its own
     partition directory) — therefore ``before_batch`` snapshot
-    semantics are EXACTLY preserved: the partition-value → directory
-    mapping is unchanged, only the file count within each directory
-    drops. ``{path}/meta`` (one row) is left alone. Crash-rerunnable
-    via compact_parquet's tmp/old rename protocol.
+    semantics are EXACTLY preserved: only the file count within each
+    directory drops. The manifest is left alone. Crash-rerunnable via
+    compact_parquet's tmp/old rename protocol.
 
     Returns {"bands": (files_before, files_after), "sigs": ...}."""
     from ..sources.sinks import compact_parquet
@@ -1744,7 +1764,7 @@ def compact_prior_index(spark, path: str,
 
 def expire_index_batches(path: str, keep_from: int) -> int:
     """Retention, the policy half of index maintenance: drop all
-    ``ingest_batch < keep_from`` partitions from ``{path}/bands`` and
+    ``batch_id < keep_from`` partitions from ``{path}/bands`` and
     ``{path}/sigs``. This DELIBERATELY changes probe results — future
     batches are no longer screened against the expired archive content
     (the operator a pipeline runs when its dedup horizon is "the last
@@ -1752,45 +1772,33 @@ def expire_index_batches(path: str, keep_from: int) -> int:
     the expired range see only what survives, so expire only below the
     oldest snapshot any consumer still replays. Pure directory removal
     (partition pruning in reverse) — no Spark job, no rewrite of kept
-    batches. Returns the number of partition directories removed."""
-    import os
+    batches. Returns the number of partition directories removed.
+
+    Refuses to empty either table: retire the whole index by deleting
+    it, not by expiring past its newest batch. Checked PER table: a
+    crash between the sigs and bands commits can leave the two at
+    different newest batches (review r10 ×2)."""
     import re
     import shutil
 
-    # refuse to empty the index: removing EVERY partition leaves a
-    # bands/sigs dir holding only _SUCCESS, and the next probe's
-    # parquet read dies on schema inference instead of a clear error —
-    # retire the whole index by deleting it, not by expiring past its
-    # newest batch. Checked PER subdir: a crash between the bands and
-    # sigs writes can leave the two at different newest batches, and
-    # emptying EITHER breaks the probe (review r10 ×2).
+    tables = {}
     for sub in ("bands", "sigs"):
-        local = f"{path}/{sub}"
-        if local.startswith("file://"):
-            local = local[len("file://"):]
-        batches = sorted(
-            int(m.group(1)) for name in
-            (os.listdir(local) if os.path.isdir(local) else [])
-            if (m := re.fullmatch(r"ingest_batch=(\d+)", name)))
-        if batches and keep_from > batches[-1]:
+        d = os.path.join(_local(path), sub)
+        tables[sub] = {
+            int(m.group(1)): os.path.join(d, name)
+            for name in (os.listdir(d) if os.path.isdir(d) else [])
+            if (m := re.fullmatch(r"batch_id=(\d+)", name))}
+        if tables[sub] and keep_from > max(tables[sub]):
             raise ValueError(
                 f"expire_index_batches: keep_from={keep_from} would "
                 f"remove every {sub} partition (its newest batch is "
-                f"{batches[-1]}) — delete the index instead of "
+                f"{max(tables[sub])}) — delete the index instead of "
                 "expiring it empty")
-    removed = 0
-    for sub in ("bands", "sigs"):
-        local = f"{path}/{sub}"
-        if local.startswith("file://"):
-            local = local[len("file://"):]
-        if not os.path.isdir(local):
-            continue
-        for name in os.listdir(local):
-            m = re.fullmatch(r"ingest_batch=(\d+)", name)
-            if m and int(m.group(1)) < keep_from:
-                shutil.rmtree(os.path.join(local, name))
-                removed += 1
-    return removed
+    doomed = [d for parts in tables.values()
+              for b, d in parts.items() if b < keep_from]
+    for d in doomed:
+        shutil.rmtree(d)
+    return len(doomed)
 
 
 def screen_vs_prior(batch: DataFrame, prior: DataFrame, n: int = 3,
@@ -1826,17 +1834,17 @@ def retract_index_keys(spark, path: str, prior_ids) -> dict:
     batches by age) cannot make: a refresh crawl's diff names exactly
     which pages were removed or changed (``urls.crawl_diff``), and
     leaving them in the index screens future batches against stale
-    content. Removes every band row and signature whose ``prior_id``
-    is in ``prior_ids`` (list = plan-literal IN filter; DataFrame =
-    broadcast anti-join — the big-delta path), rewriting ONLY the
-    ``ingest_batch`` partitions that contain them via the tmp/old
-    rename protocol (``sources.sinks.retract_keys_from_parquet``) —
-    crash-rerunnable at any point, untouched batches byte-identical.
+    content. Removes every band row and signature whose ``doc_id`` is
+    in ``prior_ids`` (list = plan-literal IN filter; DataFrame with a
+    ``doc_id`` column = broadcast anti-join — the big-delta path),
+    rewriting ONLY the ``batch_id`` partitions that contain them via
+    the tmp/old rename protocol (``sources.sinks.retract_keys_from_parquet``)
+    — crash-rerunnable at any point, untouched batches byte-identical.
 
     Contract pinned in tests/test_index_retract.py: an index grown
     then retracted equals a fresh build over the surviving corpus
     (signatures and band rows are per-document, so retraction is
-    exact set difference). ``{path}/meta`` is untouched. Retraction
+    exact set difference). The manifest is untouched. Retraction
     that would empty the index is refused (delete it instead).
 
     Composes as: ``crawl_diff`` → retract removed+changed →
@@ -1845,5 +1853,5 @@ def retract_index_keys(spark, path: str, prior_ids) -> dict:
     from ..sources.sinks import retract_keys_from_parquet
 
     return {sub: retract_keys_from_parquet(
-                spark, f"{path}/{sub}", "prior_id", prior_ids)
+                spark, f"{path}/{sub}", "doc_id", prior_ids)
             for sub in ("bands", "sigs")}

@@ -18,8 +18,8 @@ retraction rewrites only the partitions containing delta keys
 (``sources.sinks.retract_keys_from_parquet`` — broadcast anti-join,
 tmp/old rename protocol, crash-rerunnable); the extension is the
 ordinary incremental path (one batch-sized signature/assignment pass,
-dynamic-overwrite of its own ``ingest_batch`` partition). Nothing
-re-reads, re-hashes, or re-embeds the unchanged archive.
+an overwrite of its own batch partitions only). Nothing re-reads,
+re-hashes, or re-embeds the unchanged archive.
 
 Equality contract (pinned in tests/test_index_retract.py): refreshed
 index == fresh build over the new crawl's corpus, provided unchanged
@@ -33,6 +33,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import (N_BANDS, N_HASHES, check_index_manifest,
+                    retract_index_keys, write_prior_index)
 
 RETRACT_STATUSES = ("removed", "changed")
 REPROCESS_STATUSES = ("added", "changed")
@@ -61,30 +64,26 @@ def fresh_rows_from_diff(diff: DataFrame, new_rows: DataFrame) -> DataFrame:
 def refresh_band_index(spark, index_path: str, diff: DataFrame,
                        old_ids: DataFrame, new_docs: DataFrame,
                        batch_id: int, n: int = 3,
-                       n_hashes: int | None = None,
-                       n_bands: int | None = None) -> dict:
+                       n_hashes: int = N_HASHES,
+                       n_bands: int = N_BANDS) -> dict:
     """Refresh the persisted MinHash band archive from a crawl diff:
     retract removed+changed pages' band rows and signatures
     (``dedup.retract_index_keys``), then index the added+changed pages
     from the NEW crawl as one ordinary incremental batch
-    (``dedup.write_prior_index`` — dynamic overwrite of its own
-    partition, so the refresh itself is crash-rerunnable end to end).
+    (``dedup.write_prior_index`` — an overwrite of its own ``batch_id``
+    partitions, so the refresh itself is crash-rerunnable end to end).
 
     ``old_ids``: (canon, prior_id) for the indexed corpus.
-    ``new_docs``: the new crawl's documents with (doc_id, canon, text).
+    ``new_docs``: the new crawl's documents with (doc_id, source,
+    canon, text).
     Returns the retraction stats plus the extension row count."""
-    from .dedup import (N_BANDS, N_HASHES, _check_index_meta,
-                        retract_index_keys, write_prior_index)
-
-    n_hashes = N_HASHES if n_hashes is None else n_hashes
-    n_bands = N_BANDS if n_bands is None else n_bands
     # validate against the index manifest BEFORE mutating anything: a
     # parameter mismatch must fail with the index untouched, not after
     # the retraction has already removed the changed pages (review r11)
-    _check_index_meta(spark, index_path, n, n_hashes, n_bands,
-                      "refresh_band_index")
+    check_index_manifest(index_path, n, n_hashes, n_bands,
+                         "refresh_band_index")
     stale = stale_keys_from_diff(diff, old_ids, "prior_id")
-    stats = retract_index_keys(spark, index_path, stale)
+    stats = retract_index_keys(spark, index_path, stale.toDF("doc_id"))
     fresh = fresh_rows_from_diff(diff, new_docs)
     write_prior_index(fresh.drop("canon"), index_path,
                       batch_id=batch_id, n=n,

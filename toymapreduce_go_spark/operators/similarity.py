@@ -791,8 +791,9 @@ def extend_vector_index(batch: DataFrame, path: str,
 
     Layout: batch postings land under ``{path}/postings`` partitioned
     by (ingest_batch, cell) via a dynamic-partition overwrite of ONLY
-    ``ingest_batch=<id>`` — the dedup index's exactly-once convention
-    (``dedup.write_prior_index``): a crashed-and-rerun extension
+    ``ingest_batch=<id>`` — the exactly-once convention of the state
+    tables' ``streaming/run.py:commit_batch``, which the dedup band
+    index commits through: a crashed-and-rerun extension
     replaces its own partition byte-for-byte and never touches earlier
     batches. The initial ``write_vector_index`` build writes
     ``ingest_batch=0`` the same way, so extend-batch-by-batch is

@@ -335,7 +335,8 @@ def retract_keys_from_parquet(spark, path: str, key_col: str,
 
     Partition values are reconstructed as ``col=value`` directory
     names, so partition columns must carry URL-safe scalar values
-    (ints here — both indexes partition on ingest_batch/cell).
+    (ints here — the band index partitions on batch_id, the vector
+    index on ingest_batch/cell).
 
     Returns {"partitions_rewritten": n, "rows_removed": m}."""
     import functools

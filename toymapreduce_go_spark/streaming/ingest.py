@@ -16,7 +16,8 @@ Exactly-once across restarts comes from composing two already-idempotent
 steps under one checkpoint: every write either side performs is a
 ``run.commit_batch`` — a deterministic dynamic-partition overwrite of
 ``batch_id=<N>`` (``quality_stream.quality_batch_step``,
-``dedup_stream.near_dedup_batch_step``), so a crash anywhere inside
+``dedup_stream.near_dedup_batch_step``; the dedup index's banding
+manifest is written once, on its first commit), so a crash anywhere inside
 batch N — telemetry committed but dedup not, dedup half-committed — is
 healed by the checkpoint re-delivering batch N, which rewrites exactly
 its own partitions byte-identically. The telemetry row is computed from
@@ -35,7 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from toymapreduce_go_spark.operators.dedup import N_BANDS, N_HASHES
+from toymapreduce_go_spark.operators.dedup import (N_BANDS, N_HASHES,
+                                                   check_index_manifest)
 from toymapreduce_go_spark.operators.html_extract import extract_container
 from toymapreduce_go_spark.operators.quality_model import gate_filter
 from toymapreduce_go_spark.streaming.dedup_stream import (
@@ -95,6 +97,9 @@ def run_curation_ingest(documents_stream: DataFrame, state_dir: str,
     under ``state_dir`` governs both tiers, so a crash-restart replays
     the last uncommitted batch through BOTH idempotent steps.
     ``container`` prepends the matching extraction front stage."""
+    check_index_manifest(state_dir, n, n_hashes, n_bands,
+                         "run_curation_ingest")
+
     def step(batch_df: DataFrame, batch_id: int) -> None:
         ingest_batch_step(spark, batch_df, batch_id, state_dir, n=n,
                           n_hashes=n_hashes, n_bands=n_bands,
