@@ -125,6 +125,25 @@ def test_batch_step_replay_is_idempotent(spark, tmp_path):
     assert first == again
 
 
+def test_raising_commit_leaves_no_cached_signatures(spark, tmp_path,
+                                                   monkeypatch):
+    """A commit that raises (the torn-state guard, an I/O error) must
+    not leave the step's persisted signature frame behind: every
+    checkpoint replay of the failing batch would leak one more."""
+    import toymapreduce_go_spark.streaming.dedup_stream as dedup_stream
+
+    def failing_commit(*args, **kwargs):
+        raise RuntimeError("injected commit failure")
+
+    monkeypatch.setattr(dedup_stream, "commit_index_batch", failing_commit)
+    docs = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
+            .orderBy("doc_id").limit(50))
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="injected commit failure"):
+        near_dedup_batch_step(spark, docs, 0, str(tmp_path / "state"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_streaming_curation_composes_gates_with_dedup(spark, tmp_path):
     """Streaming curation = scan-side gates on the stream feeding the
     incremental near-dedup: survivors must all satisfy the gate and be

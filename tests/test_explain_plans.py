@@ -220,9 +220,10 @@ def test_quartiles_band_plan_no_whole_table_sort_and_exact(spark):
 
 
 def test_repetition_quality_partial_agg_and_pruning(spark):
-    """Bigram mode must be partial+final hash aggregation (map-side
-    combine bounds shuffle rows at per-doc distinct bigrams), and the
-    scan must read only doc_id/source/text."""
+    """The per-source rollup must be partial+final hash aggregation
+    (every per-doc feature, the bigram mode included, is computed in
+    the scan projection, so the only aggregation is the source
+    rollup), and the scan must read only doc_id/source/text."""
     from toymapreduce_go_spark.operators.textstats import repetition_quality
 
     plan = plan_of(repetition_quality(load_table(spark, SF_DIR,

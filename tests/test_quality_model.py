@@ -1,9 +1,10 @@
 """Distilled quality classifier (operators/quality_model.py): the
-teacher (full curation gate, shuffle-bearing) is distilled into a
-student scoring documents from scan-side features only. pyspark.ml
-training is not bit-deterministic (distributed histogram aggregation),
-so the contract is behavioral: agreement floor, exact rate matching,
-shuffle-free scoring plan, and degenerate-corpus safety."""
+teacher (the full curation gate, repetition kernel included) is
+distilled into a student scoring documents from cheap scan-side
+features only. pyspark.ml training is not bit-deterministic
+(distributed histogram aggregation), so the contract is behavioral:
+agreement floor, exact rate matching, shuffle-free scoring plan, and
+degenerate-corpus safety."""
 
 from __future__ import annotations
 
@@ -11,7 +12,8 @@ import pyspark.sql.functions as F
 
 from conftest import SF_DIR
 from toymapreduce_go_spark.operators.quality_model import (
-    gate_labels, quality_model_report, score_quality, train_quality_model)
+    gate_filter, gate_labels, quality_model_report, score_quality,
+    train_quality_model)
 
 
 def _load(spark):
@@ -49,24 +51,50 @@ def test_lr_student_is_weaker_but_useful(spark):
     assert by_label[1.0] > by_label[0.0] + 0.2, by_label
 
 
-def test_scoring_plan_is_shuffle_free_scan(spark):
-    """The entire point of distillation: scoring must not run the
-    teacher's repetition shuffle — no explode (Generate), no exchange
-    before the projection, no Python execution stage."""
+def _plan(df):
     import contextlib
     import io
 
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def test_scoring_plan_is_shuffle_free_scan(spark):
+    """The entire point of distillation: scoring must not run the
+    teacher's repetition kernel — no explode (Generate), no exchange
+    before the projection, no Python execution stage."""
     docs = _load(spark)
     model = train_quality_model(docs)
     scored = score_quality(docs, model)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        scored.explain("formatted")
-    plan = buf.getvalue()
+    plan = _plan(scored)
     assert "Generate" not in plan, plan
     assert "Exchange" not in plan, plan
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in plan, marker
+
+
+def test_gate_plans_are_shuffle_free_scan(spark):
+    """The curation gate judges each row on its own text: the filter
+    and the labels are scan-side projections with no exchange, no
+    explode (Generate) and no join."""
+    docs = _load(spark)
+    for gated in (gate_filter(docs), gate_labels(docs)):
+        plan = _plan(gated)
+        for marker in ("Exchange", "Generate", "Join"):
+            assert marker not in plan, plan
+
+
+def test_gate_filter_keeps_exactly_the_label_one_rows(spark):
+    """``gate_filter`` and ``gate_labels`` are one predicate: the rows
+    the filter keeps are exactly the rows labelled 1.0."""
+    docs = _load(spark)
+    kept = sorted(tuple(r) for r in gate_filter(docs).collect())
+    labelled = sorted(tuple(r) for r in docs.join(
+        gate_labels(docs).filter("label = 1.0"), "doc_id", "left_semi")
+        .collect())
+    assert kept and kept == labelled
 
 
 def test_degenerate_corpora_do_not_crash(spark):

@@ -159,19 +159,80 @@ def test_repetition_features_short_docs_never_raise(spark):
          (3, "a", "..!!.."),                # punctuation-only: 0 tokens
          (4, "a", None),                    # null text
          (5, "b", "two words"),             # minimal bigram-bearing doc
-         (6, "b", "spam spam spam spam")],  # genuine repetition
+         (6, "b", "spam spam spam spam"),   # genuine repetition
+         (7, "b", "The the"),               # case folds to one token
+         (8, "c", " \t  "),                 # whitespace-only: 0 tokens
+         (9, "c", "!!solo!!")],             # one token among punctuation
         "doc_id long, source string, text string")
     rows = {r["doc_id"]: r for r in repetition_features(docs).collect()}
-    for short_id in (1, 2, 3, 4):
+    for short_id in (1, 2, 3, 4, 8, 9):
         assert rows[short_id]["n_bigrams"] == 0
         assert rows[short_id]["top_bigram_frac"] == 0.0
         assert rows[short_id]["dup_word_frac"] == 0.0
     assert rows[5]["n_bigrams"] == 1
     assert rows[5]["top_bigram_frac"] == 1.0
     assert rows[6]["dup_word_frac"] == 0.75
+    assert rows[7]["dup_word_frac"] == 0.5
+    assert rows[7]["top_bigram_frac"] == 1.0
     # and the rollup (the declared query + pipeline gate) stays defined
     agg = {r["source"]: r for r in repetition_quality(docs).collect()}
     assert agg["a"]["n_docs"] == 4 and agg["a"]["n_flagged"] == 0
+
+
+def _repetition_reference(text):
+    """(n_tok, n_bigrams, dup_word_frac, top_bigram_frac) in plain
+    Python: lowercased letter-run tokens, the most frequent bigram's
+    count by Counter, Spark's round(x, 4) (HALF_UP on the decimal
+    form of the double)."""
+    import re
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def r4(x):
+        return float(Decimal(repr(x)).quantize(Decimal("0.0001"),
+                                               ROUND_HALF_UP))
+
+    if text is None:
+        return None, 0, 0.0, 0.0
+    toks = [t.lower() for t in re.split("[^a-zA-Z]+", text) if t]
+    n_bigrams = max(len(toks) - 1, 0)
+    dup = r4(1.0 - len(set(toks)) / len(toks)) if toks else 0.0
+    top = (r4(max(Counter(zip(toks, toks[1:])).values()) / n_bigrams)
+           if n_bigrams else 0.0)
+    return len(toks), n_bigrams, dup, top
+
+
+def test_repetition_features_match_python_reference(spark):
+    """The one-projection kernel (top bigram = longest run of equal
+    neighbours in the sorted bigram array) equals a Counter-based
+    reference on docs built to break a run scan: tied top bigrams, the
+    longest run first or last in sort order, case folding, and 0/1
+    token, null and punctuation-only text."""
+    import random
+
+    from toymapreduce_go_spark.operators.textstats import (
+        repetition_features)
+
+    rng = random.Random(7)
+    texts = [
+        "a b a b c d c d",             # two bigrams tied for the top
+        "x y z zz zz zz zz",           # longest run sorts last
+        "aa aa aa b",                  # longest run sorts first
+        "q q q q r s r s",             # a run of 3 before a tie of 2s
+        "The the THE tHe",             # case folding: one bigram x3
+        "Ab cD ab CD",                 # mixed case folds to "ab cd" x2
+        "", "solo", None, "..!!..", "it's", "one, two",
+        " ".join(rng.choice(["lo", "Lo", "mid", "hi", "x"])
+                 for _ in range(300)),
+        " ".join(f"w{i % 7}" * (i % 3 + 1) for i in range(101)),
+    ]
+    docs = spark.createDataFrame(
+        [(i, "s", t) for i, t in enumerate(texts)],
+        "doc_id long, source string, text string")
+    got = {r["doc_id"]: (r["n_tok"], r["n_bigrams"], r["dup_word_frac"],
+                         r["top_bigram_frac"])
+           for r in repetition_features(docs).collect()}
+    assert got == {i: _repetition_reference(t) for i, t in enumerate(texts)}
 
 
 def test_source_mix_weights_math(spark):

@@ -66,11 +66,12 @@ SHOWCASE: dict[str, str] = {
         "from the scan projection with no shuffle before the per-doc "
         "aggregate."),
     "repetition_quality": (
-        "Gopher repetition gates. Look for: array features "
-        "(dup_word_frac) inside the scan-side `Project`, the bigram "
-        "mode as partial+final `HashAggregate` pairs keyed by "
-        "(doc_id, bigram) then doc_id — shuffle rows are per-doc "
-        "DISTINCT bigrams, never occurrences."),
+        "Gopher repetition gates. Look for: every per-doc feature "
+        "(dup_word_frac, and the bigram mode as the longest run in the "
+        "doc's sorted bigram array) inside ONE scan-side `Project`, no "
+        "`Generate` and no join; past load_table's round-robin scan "
+        "spread, the only exchanges feed the per-source partial+final "
+        "`HashAggregate` and the presentation sort."),
     "sequence_packing": (
         "Sharded FFD packing. Look for: `bpe_ish` token counting in the "
         "JVM projection, `FlatMapGroupsInPandas` whose input schema is "

@@ -135,20 +135,21 @@ def exact_dedup_survivors(documents: DataFrame) -> DataFrame:
 # 2. N-gram Jaccard (exact pairwise over shingle join — oracle-checkable)
 
 
-def _shingle_hashes(df: DataFrame, n: int) -> DataFrame:
-    """(doc_id, h0s array<bigint>) — 64-bit shingle fingerprints per doc,
+def _shingle_hashes(df: DataFrame, n: int,
+                    key: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+    """(*key, h0s array<bigint>) — 64-bit shingle fingerprints per doc,
     one array entry per shingle position, all map-side: each token is
     hashed once, a shingle's fingerprint combines its n token hashes (no
     shingle strings are ever materialized). Shared by MinHash (folds mins
     over the multiset) and exact Jaccard (array_distinct for set
     semantics). Each pass is projected in its own select so Catalyst
     never duplicates the previous one."""
-    toks = (df.select("doc_id", tokens("text").alias("toks"))
+    toks = (df.select(*key, tokens("text").alias("toks"))
             .filter(F.size("toks") >= n))
     th = toks.select(
-        "doc_id", F.transform("toks", lambda t: F.xxhash64(t)).alias("th"))
+        *key, F.transform("toks", lambda t: F.xxhash64(t)).alias("th"))
     return th.select(
-        "doc_id",
+        *key,
         F.transform(
             F.sequence(F.lit(1), F.size("th") - (n - 1)),
             lambda i: F.xxhash64(*[F.element_at("th", i + j)
@@ -272,11 +273,15 @@ N_BANDS = 16  # 16 bands × 4 rows → s-curve threshold ≈ (1/16)^(1/4) ≈ 0.
 
 
 def minhash_signatures(documents: DataFrame, n: int = 3,
-                       n_hashes: int = N_HASHES) -> DataFrame:
-    """(doc_id, sig array<bigint>) MinHash signatures over word n-gram
-    shingles. Permutation i is simulated by xxhash64(i, shingle_hash)
-    (seeded, deterministic — no RNG, unlike spark.ml's MinHashLSH whose
-    coefficients depend on a random seed).
+                       n_hashes: int = N_HASHES,
+                       key: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+    """(*key, sig array<bigint>) MinHash signatures over word n-gram
+    shingles; ``key`` names the input columns each signature row
+    carries (the streaming tier carries ``source`` next to doc_id, so
+    it never joins the signatures back to the batch). Permutation i is
+    simulated by xxhash64(i, shingle_hash) (seeded, deterministic — no
+    RNG, unlike spark.ml's MinHashLSH whose coefficients depend on a
+    random seed).
 
     Plan shape: SHUFFLE-FREE — the whole signature is a per-row projection
     over the scan. Each token is hashed once; shingle hash ``h0`` combines
@@ -288,7 +293,7 @@ def minhash_signatures(documents: DataFrame, n: int = 3,
     and the only shuffle in the whole near-dup pipeline is the LSH bucket
     join. (Each intermediate array is projected in its own select so
     Catalyst never duplicates the token-hash pass per permutation.)"""
-    h0 = _shingle_hashes(documents, n)
+    h0 = _shingle_hashes(documents, n, key)
     # ONE parsed expression for the whole signature array (the r14
     # driver-side rule: n_hashes separate F.transform lambdas cost a
     # py4j round trip per Column op; the identical tree parses from
@@ -296,7 +301,7 @@ def minhash_signatures(documents: DataFrame, n: int = 3,
     perms = ",".join(
         f"array_min(transform(h0s, h -> xxhash64({i}, h)))"
         for i in range(n_hashes))
-    return h0.select("doc_id", F.expr(f"array({perms})").alias("sig"))
+    return h0.select(*key, F.expr(f"array({perms})").alias("sig"))
 
 
 MINHASH_PRIME = 2147483647  # 2^31 - 1, the classic universal-hash modulus

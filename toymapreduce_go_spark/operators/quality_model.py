@@ -7,9 +7,9 @@ pretraining pipelines) and run THAT at scan speed. This module does the
 same distillation end-to-end in Spark:
 
 - **teacher** = the pipeline's full gate (length + alpha ratio + the
-  Gopher repetition gates, ``repetition_features`` — a real shuffle per
-  document corpus);
-- **student** = logistic regression over the SCAN-SIDE-ONLY features
+  Gopher repetition gates, ``curation_gate`` — one scan-side Column,
+  but its repetition kernel sorts every document's bigrams);
+- **student** = logistic regression over the cheap scan-side features
   (``textstats.quality_doc_features`` — pure projections, no shuffle),
   trained with ``pyspark.ml`` (JVM L-BFGS; the model is a dozen
   coefficients broadcast into the scoring projection);
@@ -27,44 +27,39 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import (MIN_ALPHA_RATIO, MIN_CHARS, quality_doc_features,
-                        repetition_features, repetition_flag)
+from .textstats import (MIN_ALPHA_RATIO, MIN_CHARS, REPETITION_FLAG_SQL,
+                        quality_doc_features)
 
 FEATURE_COLS = ("n_chars_d", "alpha_ratio", "punct_ratio",
                 "stopword_ratio", "mean_word_len")
 
 
-def curation_gate(documents: DataFrame) -> tuple[Column, DataFrame]:
-    """The curation gate, defined once: a document passes when the
-    returned column holds (length + alpha ratio) AND its doc_id is
-    absent from the returned frame (the Gopher repetition flags)."""
-    t = F.col("text")
-    alpha_ratio = (F.length(F.regexp_replace(t, "[^a-zA-Z]", ""))
-                   .cast("double")
-                   / F.greatest(F.length(t).cast("double"), F.lit(1.0)))
-    basic_ok = (F.length(t) >= MIN_CHARS) & (alpha_ratio >= MIN_ALPHA_RATIO)
-    flagged = (repetition_features(documents).filter(repetition_flag())
-               .select("doc_id"))
-    return basic_ok, flagged
+def curation_gate() -> Column:
+    """The curation gate, defined once: True when a row's ``text``
+    passes length + alpha ratio AND no Gopher repetition flag. One
+    scan-side Column parsed from SQL text once — no shuffle, no join.
+
+    Each row is judged on its own text, so rows that share a doc_id
+    are judged apart (an anti-join on doc_id would pool their bigrams);
+    doc_id is unique in every caller's input."""
+    alpha_ratio = ("cast(length(regexp_replace(text, '[^a-zA-Z]', ''))"
+                   " AS double) / greatest(cast(length(text) AS double),"
+                   " 1.0D)")
+    return F.expr(f"length(text) >= {MIN_CHARS}"
+                  f" AND {alpha_ratio} >= {MIN_ALPHA_RATIO!r}D"
+                  f" AND NOT {REPETITION_FLAG_SQL}")
 
 
 def gate_filter(documents: DataFrame) -> DataFrame:
     """The rows of ``documents`` that pass the curation gate — the
     batch pipeline's stage 2 and the streaming ingest's gate."""
-    basic_ok, flagged = curation_gate(documents)
-    return documents.filter(basic_ok).join(flagged, "doc_id", "left_anti")
+    return documents.filter(curation_gate())
 
 
 def gate_labels(documents: DataFrame) -> DataFrame:
     """Teacher labels: 1 = passes the curation gate, 0 = dropped."""
-    basic_ok, flagged = curation_gate(documents)
-    return (documents.select("doc_id",
-                             basic_ok.cast("int").alias("_basic"))
-            .join(flagged.withColumn("_flag", F.lit(1)), "doc_id", "left")
-            .select("doc_id",
-                    ((F.col("_basic") == 1)
-                     & F.col("_flag").isNull()).cast("double")
-                    .alias("label")))
+    return documents.select("doc_id",
+                            curation_gate().cast("double").alias("label"))
 
 
 def train_quality_model(documents: DataFrame, max_iter: int = 25,
@@ -127,7 +122,7 @@ def train_quality_model(documents: DataFrame, max_iter: int = 25,
 
 def score_quality(documents: DataFrame, model) -> DataFrame:
     """Student scores over scan-side features only: ``(doc_id, source,
-    quality_score)`` — the 100 TB path (no repetition shuffle). A None
+    quality_score)`` — the 100 TB path (no repetition kernel). A None
     model (degenerate corpus) scores everything 1.0."""
     from pyspark.ml.functions import vector_to_array
 

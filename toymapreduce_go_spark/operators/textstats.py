@@ -12,8 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import (bpe_ish_token_count, tokens,
-                              whitespace_token_count)
+from ..functions.text import (TOKEN_PATTERN, bpe_ish_token_count,
+                              tokens, whitespace_token_count)
 from .dedup import persist_shared
 
 # Tiny per-language marker vocabularies for the n-gram/stopword heuristic.
@@ -61,6 +61,12 @@ def quality_doc_features(documents: DataFrame) -> DataFrame:
     (``operators.quality_model``): length, alpha ratio, punctuation
     ratio, stopword ratio, mean word length. All pure column
     expressions (whole-stage codegen, no shuffle)."""
+    return documents.select("doc_id", "source", *quality_feature_cols())
+
+
+def quality_feature_cols() -> list[F.Column]:
+    """The ``quality_doc_features`` columns as expressions over ``text``,
+    for callers that project them next to other per-row columns."""
     t = F.col("text")
     n_chars = F.length(t).cast("double")
     alpha = F.length(F.regexp_replace(t, "[^a-zA-Z]", "")).cast("double")
@@ -70,14 +76,13 @@ def quality_doc_features(documents: DataFrame) -> DataFrame:
         tokens("text"),
         lambda x: F.lower(x).isin("the", "a", "and", "of", "to", "in"),
     )).cast("double")
-    return documents.select(
-        "doc_id", "source",
+    return [
         n_chars.alias("n_chars_d"),
         F.round(alpha / F.greatest(n_chars, F.lit(1.0)), 4).alias("alpha_ratio"),
         F.round(punct / F.greatest(n_chars, F.lit(1.0)), 4).alias("punct_ratio"),
         F.round(stop / F.greatest(n_tok, F.lit(1.0)), 4).alias("stopword_ratio"),
         F.round(alpha / F.greatest(n_tok, F.lit(1.0)), 4).alias("mean_word_len"),
-    )
+    ]
 
 
 def text_quality(documents: DataFrame) -> DataFrame:
@@ -289,66 +294,77 @@ def curation_pipeline(documents: DataFrame) -> DataFrame:
     )
 
 
+REPETITION_DUP_WORD_MAX = 0.3
+REPETITION_TOP_BIGRAM_MAX = 0.2
+
+# The repetition kernel as SQL text over the lambda variable ``toks``
+# (the doc's lowercased tokens, bound once per row by ``_over_tokens``).
+# The top bigram's count is the longest run of equal neighbours in the
+# sorted bigram array: one sort_array (native ordering, no comparator
+# lambda) and one aggregate per doc. The bigram array is built only for
+# docs with >= 2 tokens, because sequence(1, 0) steps DOWNWARD to [1, 0]
+# and element_at(toks, 0) throws INVALID_ARRAY_INDEX_IN_ELEMENT_AT.
+_TOKS_SQL = (f"transform(filter(split(text, '{TOKEN_PATTERN}'), "
+             "t -> length(t) > 0), t -> lower(t))")
+_TOP_BIGRAM_COUNT_SQL = (
+    "aggregate(sort_array(transform(sequence(1, size(toks) - 1), "
+    "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))), "
+    "named_struct('prev', cast(NULL AS string), 'run', 0, 'best', 0), "
+    "(acc, b) -> IF(b = acc.prev, "
+    "named_struct('prev', b, 'run', acc.run + 1, 'best', acc.best), "
+    "named_struct('prev', b, 'run', 1, 'best', greatest(acc.best, acc.run))),"
+    " acc -> greatest(acc.best, acc.run))")
+_REPETITION_SQL = {
+    "n_tok": "size(toks)",
+    "n_bigrams": "greatest(size(toks) - 1, 0)",
+    "dup_word_frac": (
+        "CASE WHEN size(toks) > 0 THEN round(1.0D - size(array_distinct(toks))"
+        " / cast(size(toks) AS double), 4) ELSE 0.0D END"),
+    "top_bigram_frac": (
+        f"CASE WHEN size(toks) >= 2 THEN round({_TOP_BIGRAM_COUNT_SQL}"
+        " / cast(size(toks) - 1 AS double), 4) ELSE 0.0D END"),
+}
+
+
+def _over_tokens(body: str) -> str:
+    """SQL text of ``body`` with ``toks`` bound to the row's lowercased
+    ``text`` tokens, so every feature reuses one tokenization."""
+    return f"transform(array({_TOKS_SQL}), toks -> {body})[0]"
+
+
+def _repetition_flag_sql(dup_word_frac: str, top_bigram_frac: str) -> str:
+    return (f"{dup_word_frac} > {REPETITION_DUP_WORD_MAX!r}D"
+            f" OR {top_bigram_frac} > {REPETITION_TOP_BIGRAM_MAX!r}D")
+
+
+_REPETITION_FEATURES_SQL = _over_tokens("named_struct(" + ", ".join(
+    f"'{name}', {sql}" for name, sql in _REPETITION_SQL.items()) + ")")
+# the flag straight from ``text``: one Column, usable in any projection
+# or filter (``quality_model.curation_gate``)
+REPETITION_FLAG_SQL = _over_tokens(_repetition_flag_sql(
+    _REPETITION_SQL["dup_word_frac"], _REPETITION_SQL["top_bigram_frac"]))
+
+
 def repetition_features(documents: DataFrame) -> DataFrame:
     """Per-document repetition features: ``(doc_id, source, n_tok,
     n_bigrams, dup_word_frac, top_bigram_frac)`` — the shared base of
-    the ``repetition_quality`` rollup and the corpus-build pipeline's
-    per-doc gate.
+    the ``repetition_quality`` rollup; the curation gate evaluates the
+    same kernel through ``REPETITION_FLAG_SQL``.
 
-    Plan shape: token features are scan-side array expressions; the
-    bigram mode needs a real aggregation — explode bigrams, count per
-    (doc_id, bigram), max per doc — i.e. two shuffles keyed by doc_id,
-    both linear in corpus token count (never quadratic in doc length,
-    unlike an array-of-arrays self-count). At 100 TB the (doc_id, bigram)
-    partial agg combines map-side, so shuffle rows are per-doc DISTINCT
-    bigrams, not occurrences."""
-    lowered = F.transform(tokens("text"), lambda t: F.lower(t))
-    base = documents.select(
-        "doc_id", "source", lowered.alias("toks"),
-    ).select(
-        "doc_id", "source", "toks",
-        F.size("toks").alias("n_tok"),
-        F.greatest(F.size("toks") - 1, F.lit(0)).alias("n_bigrams"),
-        F.when(F.size("toks") > 0,
-               F.round(1.0 - F.size(F.array_distinct("toks"))
-                       / F.size("toks").cast("double"), 4))
-         .otherwise(F.lit(0.0)).alias("dup_word_frac"),
-    )
-    # sequence(1, 0) steps DOWNWARD to [1, 0] when a doc has <2 tokens,
-    # and element_at(toks, 0) then throws INVALID_ARRAY_INDEX_IN_ELEMENT_AT
-    # — so the transform only runs for docs that actually have a bigram.
-    bigrams = base.select(
-        "doc_id",
-        F.explode_outer(F.expr(
-            "CASE WHEN size(toks) >= 2 THEN "
-            "transform(sequence(1, size(toks) - 1), "
-            "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1))) "
-            "ELSE array() END"
-        )).alias("bigram"),
-    ).filter(F.col("bigram").isNotNull())
-    top = (bigrams.groupBy("doc_id", "bigram")
-           .agg(F.count(F.lit(1)).alias("c"))
-           .groupBy("doc_id").agg(F.max("c").alias("top_c")))
-    return (base.drop("toks")
-            .join(top, "doc_id", "left")
-            .withColumn(
-                "top_bigram_frac",
-                F.when(F.col("n_bigrams") > 0,
-                       F.round(F.coalesce(F.col("top_c"), F.lit(0))
-                               / F.col("n_bigrams").cast("double"), 4))
-                .otherwise(F.lit(0.0)))
-            .drop("top_c"))
-
-
-REPETITION_DUP_WORD_MAX = 0.3
-REPETITION_TOP_BIGRAM_MAX = 0.2
+    Plan shape: one scan-side projection, parsed from SQL text once.
+    The bigram mode is the longest run of equal neighbours in the doc's
+    sorted bigram array, so each doc costs O(t log t) in its own token
+    count t and nothing is exploded, shuffled or joined. Every value
+    depends on the row's own text only."""
+    return (documents.select("doc_id", "source",
+                             F.expr(_REPETITION_FEATURES_SQL).alias("_rep"))
+            .select("doc_id", "source", "_rep.*"))
 
 
 def repetition_flag() -> F.Column:
     """Gopher-style keep/drop predicate over ``repetition_features``
     columns (True = flagged for removal)."""
-    return ((F.col("dup_word_frac") > REPETITION_DUP_WORD_MAX)
-            | (F.col("top_bigram_frac") > REPETITION_TOP_BIGRAM_MAX))
+    return F.expr(_repetition_flag_sql("dup_word_frac", "top_bigram_frac"))
 
 
 def repetition_quality(documents: DataFrame) -> DataFrame:

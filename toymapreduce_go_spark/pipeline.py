@@ -161,7 +161,8 @@ def build_training_corpus(spark: SparkSession, sf_dir: str,
     red = pii_redact_text(docs)
 
     # 2. quality gates: curation thresholds + repetition flags
-    # (quality_model.gate_filter, the streaming ingest's gate too).
+    # (quality_model.gate_filter, the streaming ingest's gate too): one
+    # scan-side filter, no shuffle.
     # Each stage is persisted: the funnel counts AND every downstream
     # stage re-reference it, and without a materialization Spark would
     # re-run the full upstream chain per reference (measured 3.1x decade

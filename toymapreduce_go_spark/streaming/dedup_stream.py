@@ -70,39 +70,41 @@ def near_dedup_batch_step(spark: SparkSession, batch_df: DataFrame,
     """One ``foreachBatch`` step: probe the index, verify candidates by
     estimated Jaccard (unless ``threshold is None``), pick survivors,
     commit this batch's sigs + index partitions idempotently."""
-    batch = batch_df.select("doc_id", "source", "text")
-    sig = (minhash_signatures(batch, n=n, n_hashes=n_hashes)
-           .join(batch.select("doc_id", "source"), "doc_id").persist())
-    bands = band_rows(sig, n_hashes=n_hashes, n_bands=n_bands)
-    matches = probe_index(state_dir, sig, band_rows, n_hashes, n_bands,
-                          threshold, before=batch_id)
-    fresh = bands.join(matches.select("doc_id"), "doc_id", "left_anti")
+    sig = minhash_signatures(batch_df, n=n, n_hashes=n_hashes,
+                             key=("doc_id", "source")).persist()
+    try:
+        bands = band_rows(sig, n_hashes=n_hashes, n_bands=n_bands)
+        matches = probe_index(state_dir, sig, band_rows, n_hashes, n_bands,
+                              threshold, before=batch_id)
+        fresh = bands.join(matches.select("doc_id"), "doc_id", "left_anti")
 
-    # Within-batch survivor rule: lowest doc_id per bucket is the
-    # representative; any doc sharing a bucket with a lower fresh doc_id
-    # is a candidate near-dup of it (same min-doc_id convention as the
-    # batch pipeline's skew cap) and is verified against the
-    # representative's signature before dropping.
-    bucket_min = fresh.groupBy("band_id", "band_hash").agg(
-        F.min("doc_id").alias("min_id"))
-    intra_cand = (fresh.join(bucket_min, ["band_id", "band_hash"])
-                  .filter(F.col("doc_id") > F.col("min_id"))
-                  .select("min_id", "doc_id").distinct())
-    if threshold is not None:
-        intra_cand = (
-            intra_cand
-            .join(sig.select(F.col("doc_id").alias("min_id"),
-                             F.col("sig").alias("sig_a")), "min_id")
-            .join(sig.select("doc_id", F.col("sig").alias("sig_b")),
-                  "doc_id")
-            .filter(est_jaccard_expr("sig_a", "sig_b", n_hashes)
-                    >= F.lit(threshold)))
-    intra_dup_ids = intra_cand.select("doc_id").distinct()
-    survivor_bands = fresh.join(intra_dup_ids, "doc_id", "left_anti")
+        # Within-batch survivor rule: lowest doc_id per bucket is the
+        # representative; any doc sharing a bucket with a lower fresh
+        # doc_id is a candidate near-dup of it (same min-doc_id
+        # convention as the batch pipeline's skew cap) and is verified
+        # against the representative's signature before dropping.
+        bucket_min = fresh.groupBy("band_id", "band_hash").agg(
+            F.min("doc_id").alias("min_id"))
+        intra_cand = (fresh.join(bucket_min, ["band_id", "band_hash"])
+                      .filter(F.col("doc_id") > F.col("min_id"))
+                      .select("min_id", "doc_id").distinct())
+        if threshold is not None:
+            intra_cand = (
+                intra_cand
+                .join(sig.select(F.col("doc_id").alias("min_id"),
+                                 F.col("sig").alias("sig_a")), "min_id")
+                .join(sig.select("doc_id", F.col("sig").alias("sig_b")),
+                      "doc_id")
+                .filter(est_jaccard_expr("sig_a", "sig_b", n_hashes)
+                        >= F.lit(threshold)))
+        intra_dup_ids = intra_cand.select("doc_id").distinct()
+        survivor_bands = fresh.join(intra_dup_ids, "doc_id", "left_anti")
 
-    commit_index_batch(sig.join(survivor_bands, "doc_id", "left_semi"),
-                       band_rows, state_dir, batch_id, n, n_hashes, n_bands)
-    sig.unpersist()
+        commit_index_batch(sig.join(survivor_bands, "doc_id", "left_semi"),
+                           band_rows, state_dir, batch_id, n, n_hashes,
+                           n_bands)
+    finally:  # a raising probe or commit must not leak the cached frame
+        sig.unpersist()
 
 
 def run_near_dedup_stream(documents_stream: DataFrame, state_dir: str,

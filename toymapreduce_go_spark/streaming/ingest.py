@@ -25,10 +25,12 @@ the RAW batch (the monitor must see what arrives, not what survives),
 the dedup tier from the gate-filtered batch.
 
 Scale: the composition adds nothing to either tier's cost profile — the
-gate is scan-side codegen (+ the repetition agg, keyed by doc_id within
-the batch), telemetry is one aggregated row, and the dedup probe stays
-index-sized regardless of history (measured flat per-batch wall at sf1,
-SCALE.md). No reference parity to cite: the reference engine has no
+gate is one scan-side Column (length, alpha ratio and the repetition
+kernel, each row judged on its own text; nothing shuffled or joined),
+telemetry is one projection folded into one aggregated row, the
+signatures carry ``source`` so the dedup step reads the batch once, and
+the dedup probe stays index-sized regardless of history (measured flat
+per-batch wall at sf1, SCALE.md). No reference parity to cite: the reference engine has no
 streaming at all (SURVEY.md §2c).
 """
 

@@ -15,9 +15,14 @@ with ``streaming.run.commit_batch`` (a dynamic overwrite of partition
 byte-identically instead of duplicating it. State is one row per batch
 — nothing grows with the corpus.
 
+Per batch this is one scan: the gate label (``quality_model.
+curation_gate``, one scan-side Column) and the scan-side features are
+projected side by side from each row and folded into the row by one
+global aggregate — no repetition shuffle, no self-join.
+
 No reference parity to cite: the reference has no streaming at all
 (SURVEY.md §2c); the gate predicate is the oracle-checked pipeline
-gate (``quality_model.gate_labels``).
+gate (``quality_model.curation_gate``).
 """
 
 from __future__ import annotations
@@ -27,8 +32,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from toymapreduce_go_spark.operators.quality_model import gate_labels
-from toymapreduce_go_spark.operators.textstats import quality_doc_features
+from toymapreduce_go_spark.operators.quality_model import curation_gate
+from toymapreduce_go_spark.operators.textstats import quality_feature_cols
 from toymapreduce_go_spark.streaming.run import (commit_batch, read_batches,
                                                  run_available_now)
 
@@ -40,10 +45,11 @@ _TELEMETRY_SCHEMA = ("n_docs bigint, n_pass bigint, pass_rate double, "
 def quality_batch_step(spark: SparkSession, batch_df: DataFrame,
                        batch_id: int, state_dir: str) -> None:
     """One ``foreachBatch`` step: aggregate the batch's gate outcomes +
-    features to a single row and commit it idempotently."""
-    docs = batch_df.select("doc_id", "source", "text")
-    row = (quality_doc_features(docs)
-           .join(gate_labels(docs), "doc_id")
+    features to a single row and commit it idempotently. The label and
+    the features are one projection of each row, feeding one global
+    aggregate — no join, no shuffle beyond the single-row merge."""
+    row = (batch_df.select(curation_gate().cast("double").alias("label"),
+                           *quality_feature_cols())
            .agg(F.count(F.lit(1)).alias("n_docs"),
                 F.sum("label").cast("long").alias("n_pass"),
                 F.round(F.avg("label"), 4).alias("pass_rate"),
