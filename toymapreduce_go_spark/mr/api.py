@@ -10,10 +10,27 @@ Reference contract (`pkg/mr/mr.go`):
   (mrsequential.go:110) used by 7 of the 8 example apps (SURVEY.md App. A.7)
 
 Spark mapping: the two-stage map→shuffle→reduce pipeline the reference
-hardcodes (coordinator.go:124-133, :256-271) is literally one RDD chain:
+hardcodes (coordinator.go:124-133, :256-271) is one RDD chain:
 
-    wholeTextFiles → flatMap(map_f) → repartitionAndSortWithinPartitions
-        (n_reduce, hash) → mapPartitions(group-consecutive-keys → reduce_f)
+    (filename, content) → mapPartitions(map_f, pre-group to (key, [values]))
+        → repartitionAndSortWithinPartitions(n_reduce, portable_hash)
+        → mapPartitions(group consecutive keys → reduce_f)
+
+- *Input.* Files come from ``wholeTextFiles`` with the session's default
+  parallelism as ``minPartitions``: ``CombineFileInputFormat`` packs
+  whole files into byte-balanced splits, with no DataFrame round trip
+  and no Spark job while the chain is built. DataFrame inputs enter the
+  same chain through ``.rdd``.
+- *Map side.* Each map task groups its emitted pairs by key with the
+  spill-capable ``ExternalMerger`` that PySpark's ``groupByKey`` runs on
+  its map side, bounded by ``spark.python.worker.memory``, and shuffles
+  one ``(key, [values])`` record per key instead of one pickled pair per
+  value. Values are only pre-grouped, never merged: this is not a user
+  combiner.
+- *Reduce side.* A sort shuffle, hash-partitioned with ``portable_hash``
+  so every reduce partition is key-sorted like the reference's
+  ``mr-out-N``; a streaming ``itertools.groupby`` hands ``reduce_f`` each
+  key's values once, as a lazy iterator over the grouped lists.
 
 Per Appendix A we implement the *oracle* semantics, not the reference's
 broken distributed path: one reduce per distinct key globally (not
@@ -21,8 +38,8 @@ per-intermediate-file, A.3), output rows are (key, value) pairs (A.4).
 Scheduling, shuffle transport, retry, barriers (F8, F10-F14) are Spark
 core.
 
-This layer is intentionally Python-row-based — it exists for plugin parity
-(F15), not speed. Every *declared* query except ``mr_compat_wordcount``
+This layer is Python-row-based because it runs arbitrary plugin
+functions (F15). Every *declared* query except ``mr_compat_wordcount``
 uses the declarative operators instead.
 """
 
@@ -30,9 +47,12 @@ from __future__ import annotations
 
 import itertools
 from collections.abc import Callable, Iterable, Iterator
+from operator import itemgetter
 from typing import NamedTuple
 
+from pyspark import RDD
 from pyspark.rdd import portable_hash
+from pyspark.shuffle import Aggregator, ExternalMerger
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -58,15 +78,52 @@ def simple_reduce(f: SimpleReduceFunc) -> GroupedReduceFunc:
     return grouped
 
 
-def _reduce_partition(rows: Iterator[tuple[str, str]],
+def _append(values: list[str], v: str) -> list[str]:
+    values.append(v)
+    return values
+
+
+def _extend(values: list[str], more: list[str]) -> list[str]:
+    values.extend(more)
+    return values
+
+
+# groupByKey's list aggregator: collects values, never merges them.
+_PRE_GROUP = Aggregator(lambda v: [v], _append, _extend)
+
+
+def _reduce_partition(groups: Iterator[tuple[str, list[str]]],
                       reduce_f: GroupedReduceFunc) -> Iterator[KeyValue]:
-    """Consume one key-sorted partition; call reduce_f once per distinct
-    key with a lazy value iterator (the KVIterator contract, mr.go:50-89,
-    minus the ErrStopIter sentinel — Python generators express it
-    directly)."""
-    for key, group in itertools.groupby(rows, key=lambda kv: kv[0]):
-        for out in reduce_f(key, (v for _, v in group)):
+    """Consume one key-sorted partition of pre-grouped records, at most
+    one ``(key, [values])`` per map task and key, and call reduce_f once
+    per distinct key with a lazy iterator over all of that key's lists
+    (the KVIterator contract, mr.go:50-89, minus the ErrStopIter
+    sentinel — Python generators express it directly)."""
+    for key, runs in itertools.groupby(groups, key=itemgetter(0)):
+        values = itertools.chain.from_iterable(vs for _, vs in runs)
+        for out in reduce_f(key, values):
             yield KeyValue(key, out)
+
+
+def _map_reduce(spark: SparkSession, inputs: RDD, map_f: MapFunc,
+                reduce_f: GroupedReduceFunc, n_reduce: int) -> DataFrame:
+    """The one chain: ``inputs`` holds (filename, content) rows."""
+    memory_mb = inputs._memory_limit()  # spark.python.worker.memory
+
+    def map_partition(rows) -> Iterable[tuple[str, list[str]]]:
+        merger = ExternalMerger(_PRE_GROUP, memory_mb * 0.9)
+        merger.mergeValues((kv[0], kv[1]) for row in rows
+                           for kv in map_f(str(row[0]), str(row[1])))
+        return merger.items()
+
+    out = (
+        inputs.mapPartitions(map_partition)
+        # sort-based shuffle, hash partitioner — F3/F4/F5/F6 in one call
+        .repartitionAndSortWithinPartitions(
+            numPartitions=n_reduce, partitionFunc=portable_hash)
+        .mapPartitions(lambda groups: _reduce_partition(groups, reduce_f))
+    )
+    return spark.createDataFrame(out, schema="key string, value string")
 
 
 def run_map_reduce(spark: SparkSession,
@@ -90,16 +147,7 @@ def run_map_reduce(spark: SparkSession,
     # unchanged (n_reduce sorted hash partitions either way).
     from ..functions.partitioning import spread_for_compute
     inputs = spread_for_compute(inputs, inputs.columns[0])
-    pairs = (
-        inputs.rdd
-        .flatMap(lambda row: [(kv[0], kv[1])
-                              for kv in map_f(str(row[0]), str(row[1]))])
-        # sort-based shuffle, hash partitioner — F3/F4/F5/F6 in one call
-        .repartitionAndSortWithinPartitions(
-            numPartitions=n_reduce, partitionFunc=portable_hash)
-        .mapPartitions(lambda rows: _reduce_partition(rows, reduce_f))
-    )
-    return spark.createDataFrame(pairs, schema="key string, value string")
+    return _map_reduce(spark, inputs.rdd, map_f, reduce_f, n_reduce)
 
 
 def run_map_reduce_files(spark: SparkSession,
@@ -109,12 +157,15 @@ def run_map_reduce_files(spark: SparkSession,
                          n_reduce: int = 4) -> DataFrame:
     """File-path variant: whole-file (filename, content) input exactly like
     the reference's fsutil.ReadAll scan (util.go:7-21, worker.go:199).
+    ``CombineFileInputFormat`` packs whole files into about
+    ``defaultParallelism`` byte-balanced splits, so the map side's
+    balance depends on the file sizes, not on where the files live.
     Fine for plugin-compat corpora; at 100 TB use the documents table or
     ``sources.read_text_corpus`` — never whole-file reads (SURVEY.md §7).
     """
-    files = spark.sparkContext.wholeTextFiles(path_glob)
-    inputs = spark.createDataFrame(files, schema="filename string, content string")
-    return run_map_reduce(spark, map_f, reduce_f, inputs, n_reduce)
+    sc = spark.sparkContext
+    files = sc.wholeTextFiles(path_glob, minPartitions=sc.defaultParallelism)
+    return _map_reduce(spark, files, map_f, reduce_f, n_reduce)
 
 
 # ---------------------------------------------------------------------------

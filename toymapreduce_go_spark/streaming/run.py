@@ -33,17 +33,28 @@ def commit_batch(df: DataFrame, path: str, batch_id: int) -> None:
      .partitionBy("batch_id").parquet(path))
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """``FileSystem.exists`` through the session's Hadoop configuration,
+    so every scheme Spark can read is checked the way Spark reads it."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(hpath)
+
+
 def read_batches(spark: SparkSession, path: str, schema: str,
                  before: int | None = None) -> DataFrame:
     """The state table at ``path`` as ``schema`` (which declares the
     ``batch_id int`` partition column last), optionally only the
     batches with ``batch_id < before``."""
-    try:
-        df = spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        df = None
+    df = None
+    # A table not created yet is checked for first: reading it would log
+    # FileStreamSink's "Assume no metadata directory" WARN with a stack.
+    if _path_exists(spark, path):
+        try:
+            df = spark.read.schema(schema).parquet(path)
+        except AnalysisException as e:  # removed since the check
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
     if df is None or not df.inputFiles():
         # nothing committed, or only zero-row batches (no files): a bare
         # directory reads batch_id as a data column, which breaks once
