@@ -143,34 +143,34 @@ def test_ivf_survives_single_vector_corpus(spark):
 
 
 def test_ivf_model_save_load_roundtrip(spark, tmp_path):
-    """Persisted-model IVF (train once, probe from many jobs) must
+    """A persisted index (train once, probe from many jobs) must
     reproduce the in-session trained tier exactly, and tolerate an
     empty-model edge."""
     from toymapreduce_go_spark.operators.similarity import (
-        ann_ivf_from_model, ann_ivf_trained, save_ivf_model)
+        ann_ivf_trained, ann_query_index, write_vector_index)
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    model = f"file://{tmp_path}/ivf_model"
-    save_ivf_model(spark, model, emb)
+    index = f"file://{tmp_path}/ivf_index"
+    write_vector_index(emb, index)
     got = sorted(tuple(r) for r in
-                 ann_ivf_from_model(emb, model).collect())
+                 ann_query_index(emb, index).collect())
     want = sorted(tuple(r) for r in ann_ivf_trained(emb).collect())
     assert got == want
     # empty corpus -> empty model -> empty (not crashed) probe result
     empty = spark.createDataFrame(
         [], "vec_id long, embedding array<float>, label string")
-    save_ivf_model(spark, f"file://{tmp_path}/empty_model", empty)
-    assert ann_ivf_from_model(
-        emb, f"file://{tmp_path}/empty_model").count() == 0
+    write_vector_index(empty, f"file://{tmp_path}/empty_index")
+    assert ann_query_index(
+        emb, f"file://{tmp_path}/empty_index").count() == 0
 
 
 def test_ivf_pq_model_save_load_roundtrip(spark, tmp_path):
-    """Persisted IVF-PQ model must reproduce the in-session training
+    """A persisted IVF-PQ model must reproduce the in-session training
     exactly (coarse centroids, every per-subspace codebook, and the r9
     by_residual flag — in both training modes)."""
     from toymapreduce_go_spark.operators.similarity import (
-        _train_pq_codebooks, load_ivf_pq_model, pq_residuals,
-        save_ivf_pq_model, train_ivf_centroids)
+        PQ_SAMPLE_SIZE, _train_pq_codebooks, load_vector_index_model,
+        pq_residuals, train_ivf_centroids, write_vector_index_pq)
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     sample_rows = (emb.orderBy("vec_id").limit(256)
@@ -180,16 +180,18 @@ def test_ivf_pq_model_save_load_roundtrip(spark, tmp_path):
     want_cents = train_ivf_centroids(sample, 8)
     vecs = [v for _, v in sample]
 
-    path = f"file://{tmp_path}/ivfpq_model"
-    save_ivf_pq_model(spark, path, emb)  # default: residual codebooks
-    cents, books, by_residual = load_ivf_pq_model(spark, path)
+    path = f"file://{tmp_path}/ivfpq_index"
+    # default: residual codebooks; coarse trained on the same 256
+    write_vector_index_pq(emb, path, sample_size=PQ_SAMPLE_SIZE)
+    cents, books, by_residual = load_vector_index_model(spark, path)
     assert by_residual
     assert cents == list(enumerate(want_cents))
     assert books == _train_pq_codebooks(pq_residuals(vecs, want_cents))
 
-    raw_path = f"file://{tmp_path}/ivfpq_model_raw"
-    save_ivf_pq_model(spark, raw_path, emb, by_residual=False)
-    cents_r, books_r, flag_r = load_ivf_pq_model(spark, raw_path)
+    raw_path = f"file://{tmp_path}/ivfpq_index_raw"
+    write_vector_index_pq(emb, raw_path, sample_size=PQ_SAMPLE_SIZE,
+                          by_residual=False)
+    cents_r, books_r, flag_r = load_vector_index_model(spark, raw_path)
     assert not flag_r
     assert cents_r == list(enumerate(want_cents))
     assert books_r == _train_pq_codebooks(vecs)

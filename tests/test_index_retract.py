@@ -244,7 +244,7 @@ def test_rebuild_equals_fresh_build_after_drift(spark, tmp_path):
     fresh build over the same vectors (same deterministic sample rule),
     while preserving each posting's ingest_batch."""
     from toymapreduce_go_spark.operators.similarity import (
-        rebuild_vector_index)
+        load_vector_index_model, rebuild_vector_index)
 
     emb = load_table(spark, SF_DIR, "embeddings")
     grown = str(tmp_path / "grown")
@@ -254,8 +254,7 @@ def test_rebuild_equals_fresh_build_after_drift(spark, tmp_path):
     write_vector_index(emb, fresh)
 
     def model(p):
-        return sorted((int(r["cent_id"]), tuple(r["centroid"])) for r in
-                      spark.read.parquet(f"{p}/model").collect())
+        return load_vector_index_model(spark, p)
 
     def cells(p):
         return sorted(tuple(r) for r in

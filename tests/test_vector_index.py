@@ -12,6 +12,7 @@ DuckDB value-hash parity, so equality here inherits the oracle."""
 
 from __future__ import annotations
 
+import pytest
 from conftest import SF_DIR, SF_DIR_T2
 from test_explain_plans import plan_of
 
@@ -282,16 +283,16 @@ def test_pq_rebuild_preserves_raw_code_mode(spark, tmp_path):
     codes (meta flag preserved, probe equal to a fresh raw-code
     build), never silently flip the encoding mode."""
     from toymapreduce_go_spark.operators.similarity import (
-        ann_query_index_pq, load_ivf_pq_model, rebuild_vector_index_pq,
-        write_vector_index_pq)
+        ann_query_index_pq, load_vector_index_model,
+        rebuild_vector_index_pq, write_vector_index_pq)
 
     emb = load_table(spark, SF_DIR, "embeddings")
     raw = str(tmp_path / "raw")
     write_vector_index_pq(emb, raw, by_residual=False)
-    _, _, flag0 = load_ivf_pq_model(spark, f"{raw}/pq_model")
+    _, _, flag0 = load_vector_index_model(spark, raw)
     assert flag0 is False
     rebuild_vector_index_pq(spark, raw, emb)
-    _, _, flag1 = load_ivf_pq_model(spark, f"{raw}/pq_model")
+    _, _, flag1 = load_vector_index_model(spark, raw)
     assert flag1 is False
     fresh = str(tmp_path / "fresh_raw")
     write_vector_index_pq(emb, fresh, by_residual=False)
@@ -299,22 +300,28 @@ def test_pq_rebuild_preserves_raw_code_mode(spark, tmp_path):
         == _rows(ann_query_index_pq(emb, emb, fresh))
 
 
+@pytest.mark.parametrize("tier", ["flat", "pq"])
 def test_pq_rebuild_preserves_rows_under_duplicate_vec_ids(spark,
-                                                           tmp_path):
+                                                           tmp_path,
+                                                           tier):
     """ADVICE r13: a vec_id present in TWO ingest batches must not
-    square through the rebuild's key re-join (2 postings in, 4 out) —
-    the rebuild encodes each distinct vector once and re-attaches the
-    batch keys row-preservingly."""
-    from toymapreduce_go_spark.operators.similarity import (
-        extend_vector_index_pq, rebuild_vector_index_pq,
-        write_vector_index_pq)
+    square through the rebuild (2 postings in, 4 out) — the rebuild
+    re-encodes each posting once, keeping its batch key. One rebuild
+    serves both tiers, so both are pinned."""
+    from toymapreduce_go_spark.operators import similarity as sim
 
+    write, extend, rebuild = {
+        "flat": (sim.write_vector_index, sim.extend_vector_index,
+                 lambda path: sim.rebuild_vector_index(spark, path)),
+        "pq": (sim.write_vector_index_pq, sim.extend_vector_index_pq,
+               lambda path: sim.rebuild_vector_index_pq(spark, path, emb)),
+    }[tier]
     emb = load_table(spark, SF_DIR, "embeddings").limit(64)
     dup = emb.limit(8)                      # re-ingested in batch 1
     path = str(tmp_path / "dup")
-    write_vector_index_pq(emb, path, batch_id=0)
-    extend_vector_index_pq(dup, path, batch_id=1)
+    write(emb, path, batch_id=0)
+    extend(dup, path, batch_id=1)
     before = spark.read.parquet(f"{path}/postings").count()
-    rebuild_vector_index_pq(spark, path, emb)
+    rebuild(path)
     after = spark.read.parquet(f"{path}/postings").count()
     assert before == after == emb.count() + dup.count()

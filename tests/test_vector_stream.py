@@ -133,6 +133,45 @@ def test_unexpected_errors_are_not_swallowed_into_rebuild(spark,
         vector_index_batch_step(emb, 1, str(tmp_path / "state"))
 
 
+def test_parent_format_model_fails_closed(spark, tmp_path):
+    """An index whose model is in the older flat (cent_id, centroid)
+    format must not read as "no model yet": that would send the step
+    into write_vector_index, whose full postings overwrite wipes every
+    earlier batch. The step must raise an error other than
+    NoVectorIndexModel and leave the postings byte-identical."""
+    import pytest
+
+    from toymapreduce_go_spark.operators.similarity import (
+        NoVectorIndexModel, load_vector_index_model)
+
+    def tree(root):
+        out = {}
+        for dp, _dns, fns in os.walk(root):
+            for fn in fns:
+                with open(os.path.join(dp, fn), "rb") as fh:
+                    out[os.path.relpath(os.path.join(dp, fn), root)] = \
+                        fh.read()
+        return out
+
+    state = str(tmp_path / "state")
+    emb = load_table(spark, SF_DIR, "embeddings")
+    for b in (0, 1):
+        vector_index_batch_step(emb.filter(f"pmod(vec_id, 3) = {b}"), b,
+                                state)
+    idx = os.path.join(state, VINDEX_SUBDIR)
+    cents = load_vector_index_model(spark, idx).cents
+    (spark.createDataFrame(cents, "cent_id long, centroid array<double>")
+     .coalesce(1).write.mode("overwrite").parquet(f"{idx}/model"))
+    posts = tree(f"{idx}/postings")
+    assert {b for b, _c, _v in _postings(spark, idx)} == {0, 1}
+
+    with pytest.raises(ValueError, match="model format") as err:
+        vector_index_batch_step(emb.filter("pmod(vec_id, 3) = 2"), 2,
+                                state)
+    assert not isinstance(err.value, NoVectorIndexModel)
+    assert tree(f"{idx}/postings") == posts
+
+
 def test_recall_monitor_rides_the_stream(spark, tmp_path):
     """r11: monitor_recall records the sampled brute-force recall
     floor per batch under the same state dir — one row per batch,

@@ -179,7 +179,8 @@ def quality_model_report(documents: DataFrame,
 
 def save_quality_model(model, path: str) -> None:
     """Persist the fitted student (train once on a labeled slice, score
-    many corpora — the same production pattern as ``save_ivf_model``).
+    many corpora — the same production pattern as the persisted vector
+    index's ``{path}/model``, ``similarity.write_vector_index``).
     Uses pyspark.ml's native MLWriter: the artifact is a few KB of tree/
     coefficient parquet any Spark job can load."""
     model.write().overwrite().save(path)

@@ -24,9 +24,10 @@ re-hashes, or re-embeds the unchanged archive.
 Equality contract (pinned in tests/test_index_retract.py): refreshed
 index == fresh build over the new crawl's corpus, provided unchanged
 pages keep their ids (they are not reprocessed, by design) and — for
-the vector index — the training sample is unchanged (the quantizer is
-never retrained on a refresh; ``rebuild_vector_index`` is the
-retrain path).
+the vector index — the training sample is unchanged (the model at
+``{index}/model``, one (kind, idx, sub, vec) format for the flat and
+PQ tiers, is never retrained on a refresh; ``rebuild_vector_index`` is
+the retrain path).
 """
 
 from __future__ import annotations

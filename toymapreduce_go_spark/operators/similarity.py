@@ -13,6 +13,7 @@ Two tiers:
 from __future__ import annotations
 
 import random
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -413,6 +414,16 @@ def _py_cos(a: list, b: list, na: float, nb: float) -> float:
     return _py_dot(a, b) / (na * nb) if na > 0 and nb > 0 else 0.0
 
 
+def _lowest(frame: DataFrame, n: int) -> list[tuple[int, list[float]]]:
+    """(vec_id, embedding) of the ``n`` lowest vec_ids, collected to
+    the driver — the deterministic training-sample and probe rule every
+    IVF tier uses, so any engine can reproduce it (ORDER BY vec_id
+    LIMIT n)."""
+    return [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
+            for r in frame.orderBy("vec_id").limit(n)
+            .select("vec_id", "embedding").collect()]
+
+
 IVF_SAMPLE_SIZE = 64
 IVF_TRAIN_ITERS = 3
 
@@ -488,17 +499,9 @@ def _seed_cents_probes(embeddings: DataFrame, n_cells: int, n_probes: int
     centroid rows when they suffice, one extra model-sized collect when
     n_probes > n_cells). One definition so ``ann_ivf`` and
     ``ann_ivf_filtered`` can never diverge on probe selection."""
-    cent_rows = (
-        embeddings.orderBy("vec_id").limit(n_cells)
-        .select("vec_id", "embedding").collect()
-    )
-    cents = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
-             for r in cent_rows]
-    probes = [(cid, emb) for cid, emb in cents[:n_probes]] \
-        if n_probes <= n_cells else [
-            (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-            for r in embeddings.orderBy("vec_id").limit(n_probes)
-            .select("vec_id", "embedding").collect()]
+    cents = _lowest(embeddings, n_cells)
+    probes = (cents[:n_probes] if n_probes <= n_cells
+              else _lowest(embeddings, n_probes))
     return cents, probes
 
 
@@ -540,14 +543,8 @@ def ann_ivf_trained(embeddings: DataFrame, n_cells: int = 8,
     join), better cell balance → better recall at the same probe budget
     (measured in RECALL.md). The sample is the ``sample_size`` lowest
     vec_ids, so both engines can reproduce training exactly."""
-    sample_rows = (
-        embeddings.orderBy("vec_id").limit(sample_size)
-        .select("vec_id", "embedding").collect()
-    )
-    sample = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
-              for r in sample_rows]
-    cents = (list(enumerate(train_ivf_centroids(sample, n_cells, n_iters)))
-             if sample else [])
+    sample = _lowest(embeddings, sample_size)
+    cents = list(enumerate(train_ivf_centroids(sample, n_cells, n_iters)))
     probes = sample[:n_probes]
     return _ivf_rank(embeddings, cents, probes, n_probe_cells, k)
 
@@ -557,12 +554,10 @@ def _assign_cells(embeddings: DataFrame,
                   keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """Literal-centroid assignment projection: (vec_id, embedding,
     *keep_cols, cell) with cell = nearest-centroid argmax. Shared by
-    the in-session IVF tiers and the persisted index writer;
+    the in-session IVF tiers and the persisted flat index;
     ``keep_cols`` rides extra columns through (the rebuild path keeps
     each posting's original ingest_batch)."""
     from ..functions.partitioning import spread_for_compute
-
-    cent_norms = {cid: _py_norm(emb) for cid, emb in cents}
 
     # the argmax fold is an interpreted higher-order expression
     # (n_cells × dims lambda calls per vector) — floor the scan
@@ -577,36 +572,40 @@ def _assign_cells(embeddings: DataFrame,
     emb_n = embeddings.select(
         "vec_id", "embedding", *keep_cols,
         F.expr(l2_norm_sql("embedding")).alias("nrm"))
+    return emb_n.select(
+        "vec_id", "embedding", *keep_cols,
+        F.expr(_cell_argmax_sql(cents, "nrm")).alias("cell"))
 
-    # The whole argmax is assembled as ONE SQL string and parsed JVM-side
-    # in a single F.expr call: building ~n_cells*dim literal Column nodes
-    # through the Python API costs thousands of Py4J round trips (~1.5 s
-    # of driver time for 16x64), while parsing the equivalent text is
-    # milliseconds.
-    def cent_score_sql(cid: int, emb: list) -> str:
-        cn = cent_norms[cid]
+
+def _cell_argmax_sql(cents: list[tuple[int, list[float]]],
+                     norm_col: str) -> str:
+    """THE nearest-centroid rule as SQL text over ``embedding`` and its
+    precomputed L2 norm ``norm_col`` (one norm per row, reused by every
+    centroid score), shared by ``_assign_cells`` and ``_pq_assign``.
+
+    The whole argmax is ONE string parsed JVM-side in a single F.expr:
+    building ~n_cells*dim literal Column nodes through the Python API
+    costs thousands of Py4J round trips (~1.5 s of driver time for
+    16x64), while parsing the equivalent text is milliseconds.
+    greatest(struct(cos, cent_id)) breaks ties to the larger cent_id;
+    greatest() needs >= 2 operands, so a one-centroid model
+    (single-vector corpus) assigns every row to that cell outright."""
+    if len(cents) == 1:
+        return f"{cents[0][0]}L"
+
+    def score(emb: list) -> str:
+        cn = _py_norm(emb)
         if cn == 0:
             return "0D"
         arr = "array(" + ",".join(f"{x!r}D" for x in emb) + ")"
         d = (f"aggregate(zip_with({arr}, embedding,"
              " (x, y) -> x * double(y)), 0D, (a, x) -> a + x)")
-        return f"(case when nrm > 0D then {d} / ({cn!r}D * nrm) else 0D end)"
+        return (f"(case when {norm_col} > 0D then {d} / "
+                f"({cn!r}D * {norm_col}) else 0D end)")
 
-    # nearest-centroid argmax over the literal set via
-    # greatest(struct(cos, cent_id)) — ties break to the larger cent_id,
-    # matching the previous max(struct(...)) semantics.
-    # greatest() needs >= 2 operands; a one-centroid model (single-vector
-    # corpus) assigns every row to that cell outright.
-    if len(cents) == 1:
-        best_sql = f"{cents[0][0]}L"
-    else:
-        best_sql = "greatest(" + ",".join(
-            f"struct({cent_score_sql(cid, emb)} as cos_c, {cid}L as cent_id)"
-            for cid, emb in cents
-        ) + ").cent_id"
-    return emb_n.select(
-        "vec_id", "embedding", *keep_cols,
-        F.expr(best_sql).alias("cell"))
+    return "greatest(" + ",".join(
+        f"struct({score(emb)} as cos_c, {cid}L as cent_id)"
+        for cid, emb in cents) + ").cent_id"
 
 
 def _top_probe_cells(cents: list[tuple[int, list[float]]],
@@ -630,17 +629,13 @@ def _top_probe_cells(cents: list[tuple[int, list[float]]],
     return out
 
 
-def _route_probes(spark, cents: list[tuple[int, list[float]]],
-                  probes: list[tuple[int, list[float]]],
-                  n_probe_cells: int) -> DataFrame:
+def _route_probes(spark, routed: list[tuple[int, list[float], list[int]]]
+                  ) -> DataFrame:
     """Probe→cell routing is model-sized work (|probes| × n_cells
     scores): computed driver-side (``_top_probe_cells``), shipped as a
     literal broadcast frame (probe_id, probe_emb, cell)."""
     return spark.createDataFrame(
-        [(pid, emb, cell)
-         for pid, emb, cells in _top_probe_cells(cents, probes,
-                                                 n_probe_cells)
-         for cell in cells],
+        [(pid, emb, cell) for pid, emb, cells in routed for cell in cells],
         "probe_id long, probe_emb array<double>, cell long",
     )
 
@@ -678,194 +673,10 @@ def _ivf_rank(embeddings: DataFrame,
         return embeddings.sparkSession.createDataFrame(
             [], "probe_id long, neighbor_id long, rank int, cos_sim double")
     assigned = _assign_cells(embeddings, cents)
-    probe_cells = _route_probes(embeddings.sparkSession, cents, probes,
-                                n_probe_cells)
+    probe_cells = _route_probes(
+        embeddings.sparkSession,
+        _top_probe_cells(cents, probes, n_probe_cells))
     return _rank_probe_candidates(assigned, probe_cells, k)
-
-
-def save_ivf_model(spark, path: str, embeddings: DataFrame,
-                   n_cells: int = 8, n_iters: int = IVF_TRAIN_ITERS,
-                   sample_size: int = IVF_SAMPLE_SIZE) -> None:
-    """Train the Lloyd's IVF coarse quantizer once and persist it as a
-    tiny parquet model (cent_id, centroid) — the production pattern:
-    indexes are built by one job and probed by many, so the centroids
-    must outlive the session instead of retraining per query. The model
-    is a few hundred doubles; readers inline it as plan literals exactly
-    like the in-session tier."""
-    sample_rows = (embeddings.orderBy("vec_id").limit(sample_size)
-                   .select("vec_id", "embedding").collect())
-    sample = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
-              for r in sample_rows]
-    cents = train_ivf_centroids(sample, n_cells, n_iters) if sample else []
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)],
-        "cent_id long, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def ann_ivf_from_model(embeddings: DataFrame, model_path: str,
-                       n_probe_cells: int = 2, n_probes: int = 5,
-                       k: int = DEFAULT_K) -> DataFrame:
-    """Probe a persisted IVF model: identical plan shape to the trained
-    in-session tier (literal-centroid assignment projection + bucket
-    join); only the centroid source differs."""
-    spark = embeddings.sparkSession
-    cent_rows = spark.read.parquet(model_path).orderBy("cent_id").collect()
-    cents = [(int(r["cent_id"]), [float(x) for x in r["centroid"]])
-             for r in cent_rows]
-    probe_rows = (embeddings.orderBy("vec_id").limit(n_probes)
-                  .select("vec_id", "embedding").collect())
-    probes = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
-              for r in probe_rows]
-    return _ivf_rank(embeddings, cents, probes, n_probe_cells, k)
-
-
-def write_vector_index(embeddings: DataFrame, path: str,
-                       n_cells: int = 8, n_iters: int = IVF_TRAIN_ITERS,
-                       sample_size: int = IVF_SAMPLE_SIZE,
-                       batch_id: int = 0) -> None:
-    """Persist the FULL vector index — model AND posting lists — the
-    production build-once/probe-many pattern ``save_ivf_model`` only
-    half delivers (it persists centroids, but every probe job still
-    re-scans and re-assigns the whole corpus). Here the corpus is
-    assigned once (the same scan-side literal-centroid argmax as
-    ``ann_ivf_trained``) and written to ``{path}/postings``
-    PARTITIONED BY cell, so a probe reads only its routed cells'
-    partitions: probe cost ∝ probed cells × cell size, independent of
-    corpus size. ``{path}/model`` holds the (cent_id, centroid) rows.
-
-    Training uses the same deterministic sample as ``ann_ivf_trained``
-    (lowest ``sample_size`` vec_ids), so ``ann_query_index`` over this
-    index is bit-identical to the in-session trained tier (doubles
-    round-trip parquet exactly) — equality pinned in
-    ``tests/test_vector_index.py``, inheriting the trained tier's
-    DuckDB oracle. At 100 TB, cells are also the skew unit: n_cells
-    grows ∝ corpus (the SemDeDup convention) so partitions stay
-    bounded."""
-    spark = embeddings.sparkSession
-    sample_rows = (embeddings.orderBy("vec_id").limit(sample_size)
-                   .select("vec_id", "embedding").collect())
-    sample = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
-              for r in sample_rows]
-    cents = (list(enumerate(train_ivf_centroids(sample, n_cells, n_iters)))
-             if sample else [])
-    spark.createDataFrame(
-        [(cid, emb) for cid, emb in cents],
-        "cent_id long, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/model")
-    if cents:
-        # ingest_batch=<batch_id> in the same (ingest_batch, cell)
-        # layout extend_vector_index appends to, so builds and
-        # extensions are one uniform index (probes prune on cell either
-        # way). batch_id matters to the STREAMING tier's train-on-
-        # first-nonempty-batch fallback: the building batch must own
-        # its true partition id so a checkpoint replay (which takes the
-        # extend path once the model exists) overwrites the SAME
-        # partition instead of leaving a duplicate at 0.
-        (_assign_cells(embeddings, cents)
-         .withColumn("ingest_batch", F.lit(batch_id))
-         .write.mode("overwrite")
-         .partitionBy("ingest_batch", "cell")
-         .parquet(f"{path}/postings"))
-
-
-class NoVectorIndexModel(ValueError):
-    """Raised by ``extend_vector_index`` when ``{path}/model`` is absent
-    — a DEDICATED sentinel so callers with a train-on-first-batch
-    fallback (``streaming.vector_stream``) can distinguish "no model
-    yet" from any other ValueError: catching bare ValueError there
-    would route an unexpected error into ``write_vector_index``, whose
-    postings write is a full overwrite that silently wipes every
-    previously ingested batch (advice r10). Subclasses ValueError so
-    pre-existing callers keep working."""
-
-
-def extend_vector_index(batch: DataFrame, path: str,
-                        batch_id: int) -> None:
-    """Incrementally extend a ``write_vector_index`` index with a new
-    batch of vectors — the production IVF lifecycle: the coarse
-    quantizer is trained ONCE (the stored model is never touched) and
-    every later batch is merely ASSIGNED with the stored centroids and
-    appended, so ingest cost is one scan-side argmax projection over
-    the batch, independent of index size.
-
-    Layout: batch postings land under ``{path}/postings`` partitioned
-    by (ingest_batch, cell) via a dynamic-partition overwrite of ONLY
-    ``ingest_batch=<id>`` — the exactly-once convention of the state
-    tables' ``streaming/run.py:commit_batch``, which the dedup band
-    index commits through: a crashed-and-rerun extension
-    replaces its own partition byte-for-byte and never touches earlier
-    batches. The initial ``write_vector_index`` build writes
-    ``ingest_batch=0`` the same way, so extend-batch-by-batch is
-    bit-identical to a one-shot build over the union (same centroids,
-    same argmax — pinned in tests/test_vector_index.py). Probes prune
-    on cell exactly as before; the extra partition level only adds
-    directories, and ``dedup.compact_prior_index``'s compactor applies
-    if file counts ever matter."""
-    from pyspark.errors import AnalysisException
-    spark = batch.sparkSession
-    try:
-        cent_rows = (spark.read.parquet(f"{path}/model")
-                     .orderBy("cent_id").collect())
-    except AnalysisException:
-        cent_rows = []
-    cents = [(int(r["cent_id"]), [float(x) for x in r["centroid"]])
-             for r in cent_rows]
-    if not cents:
-        raise NoVectorIndexModel(
-            f"extend_vector_index: no model at {path}/model — build the "
-            "index with write_vector_index first (extensions assign with "
-            "the STORED centroids; they never train)")
-    (_assign_cells(batch, cents)
-     .withColumn("ingest_batch", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("ingest_batch", "cell")
-     .parquet(f"{path}/postings"))
-
-
-def ann_query_index(probes_df: DataFrame, path: str,
-                    n_probe_cells: int = 2, n_probes: int = 5,
-                    k: int = DEFAULT_K,
-                    before_batch: int | None = None) -> DataFrame:
-    """Probe a ``write_vector_index`` index: centroids load as a tiny
-    collect, probe routing is driver-side, and the postings scan is
-    PARTITION-PRUNED to the routed cells via a literal IN filter on the
-    partition column (plan-asserted: ``PartitionFilters`` on cell) —
-    the corpus is never re-read, re-assigned, or shuffled. Probes come
-    from ``probes_df`` (lowest ``n_probes`` vec_ids, the repo's probe
-    convention), which need not be the indexed corpus — the
-    build-once/probe-many split.
-
-    ``before_batch`` restricts the scan to ``ingest_batch <
-    before_batch`` partitions — the dedup index's snapshot-read
-    contract (``dedup.near_dedup_vs_index``) inherited here (verdict
-    r10 item 2): the returned frame is LAZY, so a probe racing a
-    concurrent ``extend_vector_index`` (or re-evaluated after one)
-    would otherwise see that extension's partial or complete postings.
-    Pass the batch id about to be written and the probe is pinned to
-    the committed snapshot (byte-identity across an extension is
-    pinned in tests/test_vector_index.py). Both filters are partition
-    filters, so old probes also never pay for newer snapshots."""
-    spark = probes_df.sparkSession
-    cent_rows = (spark.read.parquet(f"{path}/model")
-                 .orderBy("cent_id").collect())
-    cents = [(int(r["cent_id"]), [float(x) for x in r["centroid"]])
-             for r in cent_rows]
-    probe_rows = (probes_df.orderBy("vec_id").limit(n_probes)
-                  .select("vec_id", "embedding").collect())
-    probes = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
-              for r in probe_rows]
-    if not cents or not probes:
-        return spark.createDataFrame(
-            [], "probe_id long, neighbor_id long, rank int, cos_sim double")
-    probe_cells = _route_probes(spark, cents, probes, n_probe_cells)
-    routed = sorted({int(r["cell"]) for r in probe_cells.collect()})
-    postings = (spark.read.parquet(f"{path}/postings")
-                .filter(F.col("cell").isin(routed)))
-    if before_batch is not None:
-        postings = postings.filter(F.col("ingest_batch") < before_batch)
-    return _rank_probe_candidates(postings, probe_cells, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1048,10 +859,7 @@ def ann_ivf_pq(embeddings: DataFrame, n_cells: int = 8,
     Pytest tier: exact parity is meaningless for a lossy code; the
     contract is the recall floor vs bruteforce (RECALL.md) plus
     deterministic encoding."""
-    sample_rows = (embeddings.orderBy("vec_id").limit(sample_size)
-                   .select("vec_id", "embedding").collect())
-    sample = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
-              for r in sample_rows]
+    sample = _lowest(embeddings, sample_size)
     if not sample:
         return embeddings.sparkSession.createDataFrame(
             [], "probe_id long, neighbor_id long, rank int, approx_cos double")
@@ -1061,10 +869,10 @@ def ann_ivf_pq(embeddings: DataFrame, n_cells: int = 8,
     books = _train_pq_codebooks(
         pq_residuals(vecs, [c for _, c in cents]) if by_residual
         else vecs, m, ksub)
-    probes = sample[:n_probes]
     assigned = _pq_assign(embeddings, cents, books, by_residual)
-    probe_df = _pq_probe_frame(embeddings.sparkSession, cents, books,
-                               probes, n_probe_cells, by_residual)
+    probe_df = _pq_probe_frame(
+        embeddings.sparkSession, IndexModel(cents, books, by_residual),
+        _top_probe_cells(cents, sample[:n_probes], n_probe_cells))
     return _adc_rank(assigned, probe_df, k, refine,
                      embeddings.select("vec_id", "embedding"),
                      out_col="approx_cos")
@@ -1073,66 +881,52 @@ def ann_ivf_pq(embeddings: DataFrame, n_cells: int = 8,
 def _pq_assign(embeddings: DataFrame,
                cents: list[tuple[int, list[float]]],
                books: list[list[list[float]]],
-               by_residual: bool) -> DataFrame:
-    """(vec_id, codes, vnorm, cell): coarse cell + PQ codes + stored
-    norm — ONE encode projection (residual mode adds a broadcast join
-    against the model-sized centroid table so the code expression can
-    subtract the row's own centroid). Shared by the in-session
-    ``ann_ivf_pq`` and the persisted PQ index writer/extender."""
-    cent_norms = {cid: _py_norm(emb) for cid, emb in cents}
+               by_residual: bool,
+               keep_cols: tuple[str, ...] = ()) -> DataFrame:
+    """(vec_id, codes, vnorm, *keep_cols, cell): coarse cell + PQ
+    codes + stored norm — ONE encode projection (residual mode adds a
+    broadcast join against the model-sized centroid table so the code
+    expression can subtract the row's own centroid). Shared by the
+    in-session ``ann_ivf_pq`` and the persisted PQ index."""
     encoded = embeddings.select(
-        "vec_id", "embedding",
+        "vec_id", "embedding", *keep_cols,
         F.expr(l2_norm_sql("embedding")).alias("vnorm"))
-    if len(cents) == 1:
-        best_sql = f"{cents[0][0]}L"
-    else:
-        def cs(cid, emb):
-            cn = cent_norms[cid]
-            if cn == 0:
-                return "0D"
-            arr = "array(" + ",".join(f"{x!r}D" for x in emb) + ")"
-            d = (f"aggregate(zip_with({arr}, embedding, (x, y) -> "
-                 f"x * double(y)), 0D, (a, x) -> a + x)")
-            return (f"(case when vnorm > 0D then {d} / ({cn!r}D * vnorm) "
-                    f"else 0D end)")
-        best_sql = "greatest(" + ",".join(
-            f"struct({cs(cid, emb)} as cos_c, {cid}L as cent_id)"
-            for cid, emb in cents) + ").cent_id"
-    with_cell = encoded.withColumn("cell", F.expr(best_sql))
+    with_cell = encoded.withColumn(
+        "cell", F.expr(_cell_argmax_sql(cents, "vnorm")))
     if by_residual:
         cents_df = embeddings.sparkSession.createDataFrame(
             [(cid, c) for cid, c in cents], "cell long, cvec array<double>")
         return (with_cell.join(broadcast(cents_df), "cell")
                 .select("vec_id", F.expr(
                     _pq_codes_sql(books, residual_col="cvec"))
-                    .alias("codes"), "vnorm", "cell"))
+                    .alias("codes"), "vnorm", *keep_cols, "cell"))
     return with_cell.select(
         "vec_id", F.expr(_pq_codes_sql(books)).alias("codes"),
-        "vnorm", "cell")
+        "vnorm", *keep_cols, "cell")
 
 
-def _pq_probe_frame(spark, cents: list[tuple[int, list[float]]],
-                    books: list[list[list[float]]],
-                    probes: list[tuple[int, list[float]]],
-                    n_probe_cells: int, by_residual: bool) -> DataFrame:
-    """(probe_id, probe_emb, pnorm, lut, cell, qc): probe→cell routing
-    + the per-probe ADC LUT (LUT[j][c] = <probe_subj, centroid_jc>) —
-    all model-sized driver work, shipped as one literal broadcast
-    frame. Residual mode carries the exact <q, c_cell> term (``qc``)
-    the quantized residual rides on. Routing is ``_top_probe_cells``
-    — the SAME rule the flat index probes with (the PQ-equals-flat
-    pin's precondition)."""
+def _pq_probe_frame(spark, model: IndexModel,
+                    routed: list[tuple[int, list[float], list[int]]]
+                    ) -> DataFrame:
+    """(probe_id, probe_emb, pnorm, lut, cell, qc): the routed probes
+    (``_top_probe_cells`` — the SAME rule the flat index probes with,
+    the PQ-equals-flat pin's precondition) + the per-probe ADC LUT
+    (LUT[j][c] = <probe_subj, centroid_jc>) — all model-sized driver
+    work, shipped as one literal broadcast frame. Residual mode
+    carries the exact <q, c_cell> term (``qc``) the quantized residual
+    rides on."""
+    books = model.books
     m = len(books)
     dsub = len(books[0][0])
-    cent_by_id = dict(cents)
+    cent_by_id = dict(model.cents)
     probe_rows = []
-    for pid, emb, cells in _top_probe_cells(cents, probes,
-                                            n_probe_cells):
+    for pid, emb, cells in routed:
         pn = _py_norm(emb)
         lut = [[_py_dot(emb[j * dsub:(j + 1) * dsub], c)
                 for c in books[j]] for j in range(m)]
         for cell in cells:
-            qc = _py_dot(emb, cent_by_id[cell]) if by_residual else 0.0
+            qc = (_py_dot(emb, cent_by_id[cell]) if model.by_residual
+                  else 0.0)
             probe_rows.append((pid, emb, pn, lut, cell, qc))
     return spark.createDataFrame(
         probe_rows,
@@ -1186,190 +980,183 @@ def _adc_rank(assigned: DataFrame, probe_df: DataFrame, k: int,
             .orderBy("probe_id", "rank"))
 
 
-def save_ivf_pq_model(spark, path: str, embeddings: DataFrame,
-                      n_cells: int = 8, m: int = PQ_M,
-                      ksub: int = PQ_KSUB,
-                      sample_size: int = PQ_SAMPLE_SIZE,
-                      by_residual: bool = True) -> None:
-    """Train the coarse quantizer AND the PQ codebooks once and persist
-    both as one tiny parquet model (kind, idx, sub, vec) — the
-    index-build-once/probe-many production pattern (``save_ivf_model``'s
-    sibling). ``by_residual`` (default, matching ``ann_ivf_pq``) trains
-    the codebooks on coarse residuals and records the flag in a meta
-    row so a probe-only job scores codes the way they were built.
-    Total size: n_cells·D + ksub·D doubles + one meta row."""
-    sample_rows = (embeddings.orderBy("vec_id").limit(sample_size)
-                   .select("vec_id", "embedding").collect())
-    sample = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
-              for r in sample_rows]
-    cents = train_ivf_centroids(sample, n_cells) if sample else []
-    vecs = [v for _, v in sample]
-    if sample:
-        books = _train_pq_codebooks(
-            pq_residuals(vecs, cents) if by_residual else vecs, m, ksub)
-    else:
-        books = []
-    rows = [("meta", 0, 0, [1.0 if by_residual else 0.0])]
-    rows += [("coarse", i, 0, c) for i, c in enumerate(cents)]
-    rows += [("pq", ci, j, c)
-             for j, book in enumerate(books)
-             for ci, c in enumerate(book)]
-    spark.createDataFrame(
-        rows, "kind string, idx long, sub long, vec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_ivf_pq_model(spark, path: str
-                      ) -> tuple[list[tuple[int, list[float]]],
-                                 list[list[list[float]]], bool]:
-    """(coarse centroids, PQ codebooks, by_residual) back from
-    ``save_ivf_pq_model`` output — reader twin used by tests and any
-    probe-only job. Pre-r9 models (no meta row) load as raw-code
-    (by_residual=False), which is how they were trained."""
-    rows = spark.read.parquet(path).collect()
-    cents = sorted((int(r["idx"]), [float(x) for x in r["vec"]])
-                   for r in rows if r["kind"] == "coarse")
-    pq_rows = [r for r in rows if r["kind"] == "pq"]
-    n_sub = 1 + max((int(r["sub"]) for r in pq_rows), default=-1)
-    books: list[list[list[float]]] = []
-    for j in range(n_sub):
-        sub = sorted((int(r["idx"]), [float(x) for x in r["vec"]])
-                     for r in pq_rows if int(r["sub"]) == j)
-        books.append([v for _, v in sub])
-    meta = [r for r in rows if r["kind"] == "meta"]
-    by_residual = bool(meta and float(meta[0]["vec"][0]) > 0)
-    return cents, books, by_residual
-
-
-def retract_vector_index_keys(spark, path: str, vec_ids) -> dict:
-    """Retract vectors BY KEY from a persisted ``write_vector_index``
-    index — the vector twin of ``dedup.retract_index_keys`` (verdict
-    r10 item 1): a refresh crawl re-embeds changed pages and must
-    first remove their stale vectors, and batch-level retention
-    (``expire``) cannot name individual pages. Removes every posting
-    whose ``vec_id`` is in ``vec_ids``, rewriting ONLY the
-    ``(ingest_batch, cell)`` partitions that contain them
-    (``sources.sinks.retract_keys_from_parquet`` — tmp/old rename
-    protocol, crash-rerunnable, untouched partitions byte-identical).
-
-    The coarse-quantizer MODEL is deliberately untouched: extensions
-    assign with stored centroids, so retraction must not retrain (a
-    probe would otherwise route against centroids the survivors were
-    never assigned with). Centroid refresh is ``rebuild_vector_index``.
-    Pinned in tests/test_index_retract.py: grown-then-retracted equals
-    a fresh build over the survivors whenever the retracted ids lie
-    outside the training sample (same sample → same centroids → same
-    assignment); retraction that would empty the postings is refused."""
-    from ..sources.sinks import retract_keys_from_parquet
-
-    return {"postings": retract_keys_from_parquet(
-        spark, f"{path}/postings", "vec_id", vec_ids)}
-
-
-def vector_index_recall(spark, path: str, n_probes: int = 5,
-                        k: int = DEFAULT_K,
-                        n_probe_cells: int = 2) -> dict:
-    """Recall monitor for a persisted vector index (verdict r10 item
-    3): probe the index and compare against the EXACT brute-force
-    top-k over the index's own vectors — the sampled floor a pipeline
-    computes after every extension batch, because quantizer drift is
-    silent (centroids are trained once; as the corpus grows and
-    drifts, cells skew and probe recall decays with no error anywhere).
-    Probes are the ``n_probes`` lowest vec_ids (the repo's probe
-    convention). Returns {"hits", "total", "recall"}.
-
-    Cost: the exact floor is one corpus scan against n_probes
-    broadcast probes (``knn_bruteforce`` shape) — the monitor is a
-    sampled diagnostic, priced like one extra probe batch, not an
-    index operation. When recall sinks below the pipeline's floor,
-    ``rebuild_vector_index`` retrains the quantizer in place."""
-    vectors = (spark.read.parquet(f"{path}/postings")
-               .select("vec_id", "embedding"))
-    exact: dict[int, set[int]] = {}
-    for r in knn_bruteforce(vectors, n_probes=n_probes, k=k).collect():
-        exact.setdefault(int(r["probe_id"]), set()).add(
-            int(r["neighbor_id"]))
-    got: dict[int, set[int]] = {}
-    probes = vectors.orderBy("vec_id").limit(n_probes)
-    for r in ann_query_index(probes, path, n_probe_cells=n_probe_cells,
-                             n_probes=n_probes, k=k).collect():
-        got.setdefault(int(r["probe_id"]), set()).add(
-            int(r["neighbor_id"]))
-    hits = sum(len(exact[p] & got.get(p, set())) for p in exact)
-    total = sum(len(v) for v in exact.values())
-    return {"hits": hits, "total": total,
-            "recall": hits / total if total else 1.0}
-
-
-def rebuild_vector_index(spark, path: str, n_cells: int = 8,
-                         n_iters: int = IVF_TRAIN_ITERS,
-                         sample_size: int = IVF_SAMPLE_SIZE) -> None:
-    """Retrain the coarse quantizer over the GROWN index and re-assign
-    every posting in place — the lifecycle step extensions deliberately
-    skip (they assign with stored centroids so ingest stays cheap;
-    after enough drift the recall monitor says it's time). Training
-    uses the same deterministic rule as a fresh build (lowest
-    ``sample_size`` vec_ids — now of the WHOLE index), so a rebuilt
-    index is pinned EQUAL to ``write_vector_index`` over the same
-    vectors (tests/test_index_retract.py). Each posting keeps its
-    original ``ingest_batch``, so ``before_batch`` snapshot reads stay
-    meaningful across the rebuild (rows unchanged — only their cell
-    routing moves).
-
-    Crash safety: the new model+postings are built complete at a
-    sibling ``__rebuild_tmp`` tree, then swapped in with the tmp/old
-    rename pair (the ``compact_parquet`` protocol) — re-runnable after
-    a crash at any point; readers never see a half-rebuilt index."""
-    from ..sources.sinks import commit_swap, recover_swap, swap_paths
-
-    local, tmp, old = swap_paths(path, "rebuild")
-    recover_swap(local, tmp, old, "rebuild")
-
-    posts = (spark.read.parquet(f"{path}/postings")
-             .select("vec_id", "embedding", "ingest_batch"))
-    sample_rows = (posts.orderBy("vec_id").limit(sample_size)
-                   .select("vec_id", "embedding").collect())
-    sample = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
-              for r in sample_rows]
-    cents = (list(enumerate(train_ivf_centroids(sample, n_cells,
-                                                n_iters)))
-             if sample else [])
-    spark.createDataFrame(
-        [(cid, emb) for cid, emb in cents],
-        "cent_id long, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"file://{tmp}/model")
-    if cents:
-        (_assign_cells(posts, cents, keep_cols=("ingest_batch",))
-         .write.mode("overwrite")
-         .partitionBy("ingest_batch", "cell")
-         .parquet(f"file://{tmp}/postings"))
-    commit_swap(local, tmp, old, "rebuild")
-
-
 # ---------------------------------------------------------------------------
-# PQ-coded persisted vector index (r12 verdict item 4). The flat
-# ``write_vector_index`` postings carry full float vectors — ~D·8
-# bytes each — so at 100 TB the index is corpus-sized and cannot live
-# in hot storage. This tier persists the m-byte PQ codes instead
-# (m ints + one norm per vector: ~32× smaller at dim 64), keeps the
-# same (ingest_batch, cell) partition layout so every lifecycle
-# operation carries over unchanged (extension = encode-with-stored-
-# model + dynamic partition overwrite; retraction = the same keyed
-# partition rewrite; snapshot reads = the same before_batch partition
-# filter), and probes via ADC + the standard exact-refine finish
-# AGAINST THE FULL-PRECISION CORPUS PARQUET — the codes shortlist,
-# the parquet re-ranks probes × refine × k rows, and the corpus is
-# touched for exactly that shortlist.
+# Persisted vector index: build once, extend per arrival batch, probe many.
 #
-# The coarse quantizer trains with the SAME deterministic rule as the
-# flat index (lowest IVF_SAMPLE_SIZE vec_ids), so the two tiers route
-# probes IDENTICALLY — which is what makes the correctness pin sharp:
-# whenever refine × k covers the routed cells' contents (true at the
-# fixture sizes), the PQ-refined top-k EQUALS the flat index's probe
-# answer exactly (tests/test_vector_index.py); RECALL.md carries the
+# One index serves both tiers. ``{path}/model`` holds one model format,
+# (kind, idx, sub, vec) rows: a ``meta`` row (vec[0] = the by_residual
+# flag), the ``coarse`` centroids (idx = cell id) and, for the PQ tier
+# only, the ``pq`` codebook rows (sub = subspace, idx = code).
+# ``{path}/postings`` holds one row per indexed vector, partitioned by
+# (ingest_batch, cell), so a probe reads only its routed cells'
+# partitions and an extension rewrites only its own batch. A flat
+# model's postings carry (vec_id, embedding); a PQ model's carry
+# (vec_id, codes, vnorm) — m ints + one norm, ~32× smaller at dim 64,
+# the difference between an index that fits hot storage at 100 TB and
+# one that doesn't — and its probes refine the code shortlist against
+# the full-precision corpus. Which payload a posting carries is read
+# from the stored model (pq rows or none), so build, extension,
+# retraction, snapshot reads and rebuild are one code path; the tiers'
+# public entry points differ only in training settings and ranker.
+#
+# Both tiers train the coarse quantizer with the SAME rule (the lowest
+# ``sample_size`` vec_ids, ``_train_model``), so they route probes
+# identically: whenever refine × k covers the routed cells' contents
+# (true at the fixture sizes) the PQ-refined top-k EQUALS the flat
+# probe exactly (tests/test_vector_index.py); RECALL.md carries the
 # measured floors where refine binds.
 
 PQ_REFINE = 32
+_MODEL_COLUMNS = ["kind", "idx", "sub", "vec"]
+
+
+class IndexModel(NamedTuple):
+    """A persisted index's model: the coarse quantizer ``cents``
+    ((cell id, centroid) pairs), the per-subspace PQ codebooks
+    ``books`` (empty for a flat index) and ``by_residual`` (codes
+    encode x − c(cell(x)) rather than x)."""
+    cents: list[tuple[int, list[float]]]
+    books: list[list[list[float]]]
+    by_residual: bool
+
+
+class NoVectorIndexModel(ValueError):
+    """Raised by ``load_vector_index_model`` when ``{path}/model`` is
+    absent or holds no centroids (an index built over an empty batch)
+    — a DEDICATED sentinel so callers with a train-on-first-batch
+    fallback (``streaming.vector_stream``) can distinguish "no model
+    yet" from any other ValueError: catching bare ValueError there
+    would route an unexpected error into ``write_vector_index``, whose
+    postings write is a full overwrite that silently wipes every
+    previously ingested batch (advice r10). Subclasses ValueError so
+    pre-existing callers keep working."""
+
+
+def _train_model(vectors: DataFrame, n_cells: int, n_iters: int,
+                 sample_size: int, m: int = PQ_M, ksub: int = PQ_KSUB,
+                 pq_sample_size: int = 0,
+                 by_residual: bool = False) -> IndexModel:
+    """THE training rule of every build and rebuild, both tiers: the
+    coarse quantizer is Lloyd's over the lowest ``sample_size`` vec_ids
+    (``ann_ivf_trained``'s sample, so a flat probe is bit-identical to
+    that tier and inherits its DuckDB oracle); codebooks train on the
+    lowest ``pq_sample_size`` — on their coarse residuals when
+    ``by_residual``. ``pq_sample_size=0`` trains none: a flat model."""
+    sample = _lowest(vectors, max(sample_size, pq_sample_size))
+    coarse = train_ivf_centroids(sample[:sample_size], n_cells, n_iters)
+    vecs = [v for _, v in sample[:pq_sample_size]]
+    books = _train_pq_codebooks(
+        pq_residuals(vecs, coarse) if by_residual else vecs, m, ksub)
+    return IndexModel(list(enumerate(coarse)), books, by_residual)
+
+
+def _save_model(spark, model: IndexModel, path: str) -> None:
+    """Write ``{path}/model`` — the one model writer. Total size:
+    n_cells·D (+ ksub·D for PQ) doubles + one meta row."""
+    rows = [("meta", 0, 0, [1.0 if model.by_residual else 0.0])]
+    rows += [("coarse", i, 0, c) for i, c in model.cents]
+    rows += [("pq", ci, j, c)
+             for j, book in enumerate(model.books)
+             for ci, c in enumerate(book)]
+    spark.createDataFrame(
+        rows, "kind string, idx long, sub long, vec array<double>"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/model")
+
+
+def load_vector_index_model(spark, path: str) -> IndexModel:
+    """Read ``{path}/model`` — the one model reader, for both tiers.
+
+    Raises ``NoVectorIndexModel`` when no model was built yet (absent,
+    or written over an empty batch), and a plain ValueError when the
+    directory holds anything but the (kind, idx, sub, vec) format, such
+    as the older flat (cent_id, centroid) model: mistaking that for "no
+    model yet" would send a streaming step into ``write_vector_index``,
+    whose full postings overwrite wipes every ingested batch, so it
+    fails closed instead (rebuild the index from its corpus with
+    ``write_vector_index``)."""
+    from pyspark.errors import AnalysisException
+    try:
+        frame = spark.read.parquet(f"{path}/model")
+    except AnalysisException:
+        frame = None
+    if frame is not None and frame.columns != _MODEL_COLUMNS:
+        raise ValueError(
+            f"{path}/model has columns {frame.columns}, not the vector "
+            f"index model format {_MODEL_COLUMNS} — rebuild the index "
+            "with write_vector_index / write_vector_index_pq")
+    rows = frame.collect() if frame is not None else []
+    cents = sorted((int(r["idx"]), [float(x) for x in r["vec"]])
+                   for r in rows if r["kind"] == "coarse")
+    if not cents:
+        raise NoVectorIndexModel(
+            f"no vector index model at {path}/model — build the index "
+            "with write_vector_index first (or write_vector_index_pq; "
+            "extensions encode with the STORED model, they never train)")
+    pq = sorted((int(r["sub"]), int(r["idx"]), [float(x) for x in r["vec"]])
+                for r in rows if r["kind"] == "pq")
+    n_sub = 1 + max((j for j, _, _ in pq), default=-1)
+    books = [[v for j, _, v in pq if j == sub] for sub in range(n_sub)]
+    by_residual = any(r["kind"] == "meta" and r["vec"][0] > 0
+                      for r in rows)
+    return IndexModel(cents, books, by_residual)
+
+
+def _encode(vectors: DataFrame, model: IndexModel,
+            keep_cols: tuple[str, ...] = ()) -> DataFrame:
+    """Postings rows for ``vectors`` under ``model`` — what the stored
+    model says a posting carries: PQ codes when it has codebooks, the
+    full vector otherwise. Both are one scan-side projection."""
+    if model.books:
+        return _pq_assign(vectors, model.cents, model.books,
+                          model.by_residual, keep_cols)
+    return _assign_cells(vectors, model.cents, keep_cols)
+
+
+def _commit_postings(encoded: DataFrame, dest: str, overwrite: str) -> None:
+    """THE postings write, (ingest_batch, cell) layout. ``"static"``
+    replaces the whole tree (a build or rebuild); ``"dynamic"`` replaces
+    only the ingest_batch partitions ``encoded`` carries — the
+    exactly-once convention of ``streaming/run.py:commit_batch``: a
+    crashed-and-rerun extension replaces its own partition
+    byte-for-byte and never touches earlier batches."""
+    (encoded.write.mode("overwrite")
+     .option("partitionOverwriteMode", overwrite)
+     .partitionBy("ingest_batch", "cell")
+     .parquet(dest))
+
+
+def _build(vectors: DataFrame, path: str, batch_id: int,
+           **train) -> None:
+    model = _train_model(vectors, **train)
+    _save_model(vectors.sparkSession, model, path)
+    if model.cents:
+        _commit_postings(_encode(vectors, model)
+                         .withColumn("ingest_batch", F.lit(batch_id)),
+                         f"{path}/postings", "static")
+
+
+def write_vector_index(embeddings: DataFrame, path: str,
+                       n_cells: int = 8, n_iters: int = IVF_TRAIN_ITERS,
+                       sample_size: int = IVF_SAMPLE_SIZE,
+                       batch_id: int = 0) -> None:
+    """Build the flat persisted index — model AND posting lists: the
+    corpus is assigned once (the scan-side literal-centroid argmax of
+    ``ann_ivf_trained``) and written under ``{path}/postings``, so
+    probe cost ∝ probed cells × cell size, independent of corpus size.
+
+    Training is ``ann_ivf_trained``'s (lowest ``sample_size``
+    vec_ids), so ``ann_query_index`` over this index is bit-identical
+    to the in-session trained tier (doubles round-trip parquet exactly)
+    — pinned in ``tests/test_vector_index.py``. The postings land in
+    ``ingest_batch=<batch_id>``, the layout extensions append to: the
+    streaming tier's train-on-first-nonempty-batch fallback needs the
+    building batch to own its true partition id, so a checkpoint
+    replay (which takes the extend path once the model exists)
+    overwrites the SAME partition. The postings write is a FULL
+    overwrite. At 100 TB, cells are also the skew unit: n_cells grows
+    ∝ corpus (the SemDeDup convention) so partitions stay bounded."""
+    _build(embeddings, path, batch_id, n_cells=n_cells, n_iters=n_iters,
+           sample_size=sample_size)
 
 
 def write_vector_index_pq(embeddings: DataFrame, path: str,
@@ -1380,67 +1167,91 @@ def write_vector_index_pq(embeddings: DataFrame, path: str,
                           pq_sample_size: int = PQ_SAMPLE_SIZE,
                           batch_id: int = 0,
                           by_residual: bool = True) -> None:
-    """Build the PQ-coded persisted index: ``{path}/pq_model`` holds
-    the coarse centroids + per-subspace codebooks + residual flag (the
-    ``save_ivf_pq_model`` row layout, read back by
-    ``load_ivf_pq_model``), ``{path}/postings`` holds (vec_id, codes,
-    vnorm) partitioned by (ingest_batch, cell). Coarse training =
-    the flat index's rule (lowest ``sample_size`` ids); codebooks
-    train on ``pq_sample_size`` coarse residuals."""
-    spark = embeddings.sparkSession
-    sample_rows = (embeddings.orderBy("vec_id").limit(
-        max(sample_size, pq_sample_size))
-        .select("vec_id", "embedding").collect())
-    sample = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
-              for r in sample_rows]
-    coarse = train_ivf_centroids(
-        sample[:sample_size], n_cells, n_iters) if sample else []
-    cents = list(enumerate(coarse))
-    vecs = [v for _, v in sample[:pq_sample_size]]
-    books = (_train_pq_codebooks(
-        pq_residuals(vecs, coarse) if by_residual else vecs, m, ksub)
-        if sample else [])
-    rows = [("meta", 0, 0, [1.0 if by_residual else 0.0])]
-    rows += [("coarse", i, 0, c) for i, c in cents]
-    rows += [("pq", ci, j, c)
-             for j, book in enumerate(books)
-             for ci, c in enumerate(book)]
-    spark.createDataFrame(
-        rows, "kind string, idx long, sub long, vec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/pq_model")
-    if cents:
-        (_pq_assign(embeddings, cents, books, by_residual)
-         .withColumn("ingest_batch", F.lit(batch_id))
-         .write.mode("overwrite")
-         .partitionBy("ingest_batch", "cell")
-         .parquet(f"{path}/postings"))
+    """Build the PQ-coded persisted index: the flat index's coarse
+    training rule, plus ``m`` codebooks of ``ksub`` codes trained on
+    the lowest ``pq_sample_size`` vectors (their coarse residuals when
+    ``by_residual``, the FAISS IVFPQ default); postings hold (vec_id,
+    codes, vnorm). Same layout and batch contract as
+    ``write_vector_index``."""
+    _build(embeddings, path, batch_id, n_cells=n_cells, n_iters=n_iters,
+           sample_size=sample_size, m=m, ksub=ksub,
+           pq_sample_size=pq_sample_size, by_residual=by_residual)
+
+
+def extend_vector_index(batch: DataFrame, path: str,
+                        batch_id: int) -> None:
+    """Incrementally extend an index with a new batch of vectors — the
+    production IVF lifecycle: the model is trained ONCE (never touched
+    here) and every later batch is merely ASSIGNED (and, for a PQ
+    index, encoded) with it, then dynamic-overwrites only
+    ``ingest_batch=<batch_id>`` — ingest cost is one scan-side
+    projection over the batch, independent of index size, and a
+    crash-rerun replaces its own partition. Extend-batch-by-batch is
+    bit-identical to a one-shot build over the union whenever the
+    first batch holds the training sample (pinned in
+    tests/test_vector_index.py). Raises ``NoVectorIndexModel`` when
+    there is no model yet."""
+    model = load_vector_index_model(batch.sparkSession, path)
+    _commit_postings(_encode(batch, model)
+                     .withColumn("ingest_batch", F.lit(batch_id)),
+                     f"{path}/postings", "dynamic")
 
 
 def extend_vector_index_pq(batch: DataFrame, path: str,
                            batch_id: int) -> None:
-    """Extend a PQ index with a new batch: encode with the STORED
-    model (never retrain — same contract as ``extend_vector_index``)
-    and dynamic-partition-overwrite only ``ingest_batch=<id>``.
-    Raises ``NoVectorIndexModel`` when the model is absent."""
-    from pyspark.errors import AnalysisException
-    spark = batch.sparkSession
+    """``extend_vector_index`` for a PQ index (the stored model says
+    the postings carry codes)."""
+    extend_vector_index(batch, path, batch_id)
+
+
+def _probe(probes_df: DataFrame, path: str, n_probe_cells: int,
+           n_probes: int, before_batch: int | None, rank) -> DataFrame:
+    """The probe skeleton both tiers share: load the model, route the
+    lowest-id probes driver-side, scan only the routed cells' postings
+    (``PartitionFilters`` on cell, plan-asserted) in the
+    ``before_batch`` snapshot, and hand them to the tier's ``rank``
+    (postings, routed probes, model)."""
+    spark = probes_df.sparkSession
     try:
-        cents, books, by_residual = load_ivf_pq_model(
-            spark, f"{path}/pq_model")
-    except AnalysisException:
-        cents, books = [], []
-    if not cents or not books:
-        raise NoVectorIndexModel(
-            f"extend_vector_index_pq: no model at {path}/pq_model — "
-            "build the index with write_vector_index_pq first "
-            "(extensions encode with the STORED model; they never "
-            "train)")
-    (_pq_assign(batch, cents, books, by_residual)
-     .withColumn("ingest_batch", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("ingest_batch", "cell")
-     .parquet(f"{path}/postings"))
+        model = load_vector_index_model(spark, path)
+    except NoVectorIndexModel:          # an index over an empty corpus
+        model = None
+    probes = _lowest(probes_df, n_probes)
+    if model is None or not probes:
+        return spark.createDataFrame(
+            [], "probe_id long, neighbor_id long, rank int, cos_sim double")
+    routed = _top_probe_cells(model.cents, probes, n_probe_cells)
+    cells = sorted({c for _, _, cs in routed for c in cs})
+    postings = (spark.read.parquet(f"{path}/postings")
+                .filter(F.col("cell").isin(cells)))
+    if before_batch is not None:
+        postings = postings.filter(F.col("ingest_batch") < before_batch)
+    return rank(postings, routed, model)
+
+
+def ann_query_index(probes_df: DataFrame, path: str,
+                    n_probe_cells: int = 2, n_probes: int = 5,
+                    k: int = DEFAULT_K,
+                    before_batch: int | None = None) -> DataFrame:
+    """Probe a flat index: exact cosine top-k among the routed cells'
+    postings — the corpus is never re-read, re-assigned, or shuffled.
+    Probes come from ``probes_df`` (lowest ``n_probes`` vec_ids, the
+    repo's probe convention), which need not be the indexed corpus —
+    the build-once/probe-many split.
+
+    ``before_batch`` restricts the scan to ``ingest_batch <
+    before_batch`` partitions — the dedup index's snapshot-read
+    contract (``dedup.near_dedup_vs_index``): the returned frame is
+    LAZY, so a probe racing a concurrent extension (or re-evaluated
+    after one) would otherwise see that extension's partial or
+    complete postings. Pass the batch id about to be written and the
+    probe is pinned to the committed snapshot (pinned in
+    tests/test_vector_index.py). An index over an empty corpus probes
+    empty."""
+    spark = probes_df.sparkSession
+    return _probe(probes_df, path, n_probe_cells, n_probes, before_batch,
+                  lambda postings, routed, _model: _rank_probe_candidates(
+                      postings, _route_probes(spark, routed), k))
 
 
 def ann_query_index_pq(probes_df: DataFrame, corpus: DataFrame,
@@ -1448,62 +1259,135 @@ def ann_query_index_pq(probes_df: DataFrame, corpus: DataFrame,
                        n_probes: int = 5, k: int = DEFAULT_K,
                        refine: int = PQ_REFINE,
                        before_batch: int | None = None) -> DataFrame:
-    """Probe a PQ index: model loads as a tiny collect, probe routing
-    and the ADC LUTs are driver-side, the postings scan is
-    partition-pruned to the routed cells, ADC picks the refine × k
-    shortlist from codes alone, and ONLY the shortlist joins
-    ``corpus`` (vec_id, embedding — the full-precision parquet) for
-    the exact re-rank. ``before_batch`` = the flat tier's snapshot
-    contract (a partition filter). Output schema matches
-    ``ann_query_index`` (cos_sim = exact cosine after refine), which
-    is what the equality pin compares."""
+    """Probe a PQ index: the routing, pruning and snapshot contract of
+    ``ann_query_index``, with ADC scoring (driver-side LUTs) picking a
+    refine × k shortlist from the codes alone; ONLY the shortlist joins
+    ``corpus`` (vec_id, embedding — the full-precision parquet) for the
+    exact re-rank. Output schema matches ``ann_query_index`` (cos_sim =
+    exact cosine after refine), which is what the equality pin
+    compares."""
     spark = probes_df.sparkSession
-    cents, books, by_residual = load_ivf_pq_model(
-        spark, f"{path}/pq_model")
-    probe_rows = (probes_df.orderBy("vec_id").limit(n_probes)
-                  .select("vec_id", "embedding").collect())
-    probes = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
-              for r in probe_rows]
-    if not cents or not books or not probes:
-        return spark.createDataFrame(
-            [], "probe_id long, neighbor_id long, rank int, "
-                "cos_sim double")
-    probe_df = _pq_probe_frame(spark, cents, books, probes,
-                               n_probe_cells, by_residual)
-    routed = sorted({int(r["cell"]) for r in
-                     probe_df.select("cell").distinct().collect()})
-    postings = (spark.read.parquet(f"{path}/postings")
-                .filter(F.col("cell").isin(routed)))
-    if before_batch is not None:
-        postings = postings.filter(F.col("ingest_batch") < before_batch)
-    return _adc_rank(postings, probe_df, k, refine,
-                     corpus.select("vec_id", "embedding"))
+    return _probe(probes_df, path, n_probe_cells, n_probes, before_batch,
+                  lambda postings, routed, model: _adc_rank(
+                      postings, _pq_probe_frame(spark, model, routed), k,
+                      refine, corpus))
+
+
+def _neighbor_sets(df: DataFrame) -> dict[int, set[int]]:
+    out: dict[int, set[int]] = {}
+    for r in df.collect():
+        out.setdefault(int(r["probe_id"]), set()).add(int(r["neighbor_id"]))
+    return out
+
+
+def _recall(exact_source: DataFrame, probed: DataFrame, n_probes: int,
+            k: int) -> dict:
+    """The recall monitor: ``probed``'s neighbor lists against the
+    EXACT brute-force top-k over ``exact_source`` — the sampled floor a
+    pipeline computes after every extension batch, because quantizer
+    drift is silent (centroids are trained once; as the corpus grows
+    and drifts, cells skew and probe recall decays with no error
+    anywhere). Cost: one corpus scan against n_probes broadcast probes
+    (``knn_bruteforce`` shape) — priced like one extra probe batch."""
+    exact = _neighbor_sets(knn_bruteforce(exact_source, n_probes=n_probes,
+                                          k=k))
+    got = _neighbor_sets(probed)
+    hits = sum(len(exact[p] & got.get(p, set())) for p in exact)
+    total = sum(len(v) for v in exact.values())
+    return {"hits": hits, "total": total,
+            "recall": hits / total if total else 1.0}
+
+
+def vector_index_recall(spark, path: str, n_probes: int = 5,
+                        k: int = DEFAULT_K,
+                        n_probe_cells: int = 2) -> dict:
+    """Recall of a flat index against brute force over the index's own
+    vectors; probes are the ``n_probes`` lowest vec_ids. Returns
+    {"hits", "total", "recall"}. When recall sinks below the pipeline's
+    floor, ``rebuild_vector_index`` retrains the quantizer in place."""
+    vectors = (spark.read.parquet(f"{path}/postings")
+               .select("vec_id", "embedding"))
+    return _recall(vectors, ann_query_index(
+        vectors, path, n_probe_cells=n_probe_cells, n_probes=n_probes,
+        k=k), n_probes, k)
 
 
 def vector_index_recall_pq(spark, path: str, corpus: DataFrame,
                            n_probes: int = 5, k: int = DEFAULT_K,
                            n_probe_cells: int = 2,
                            refine: int = PQ_REFINE) -> dict:
-    """The recall monitor, PQ tier: the exact floor comes from
-    brute-force over the full-precision CORPUS (the index holds codes,
-    not vectors); probes are the lowest ``n_probes`` corpus ids.
-    Returns {"hits", "total", "recall"} like ``vector_index_recall``."""
-    exact: dict[int, set[int]] = {}
-    for r in knn_bruteforce(corpus, n_probes=n_probes, k=k).collect():
-        exact.setdefault(int(r["probe_id"]), set()).add(
-            int(r["neighbor_id"]))
-    got: dict[int, set[int]] = {}
-    probes = corpus.orderBy("vec_id").limit(n_probes)
-    for r in ann_query_index_pq(probes, corpus, path,
-                                n_probe_cells=n_probe_cells,
-                                n_probes=n_probes, k=k,
-                                refine=refine).collect():
-        got.setdefault(int(r["probe_id"]), set()).add(
-            int(r["neighbor_id"]))
-    hits = sum(len(exact[p] & got.get(p, set())) for p in exact)
-    total = sum(len(v) for v in exact.values())
-    return {"hits": hits, "total": total,
-            "recall": hits / total if total else 1.0}
+    """``vector_index_recall`` for a PQ index: the index holds codes,
+    not vectors, so the exact floor and the probes come from the
+    full-precision ``corpus``."""
+    return _recall(corpus, ann_query_index_pq(
+        corpus, corpus, path, n_probe_cells=n_probe_cells,
+        n_probes=n_probes, k=k, refine=refine), n_probes, k)
+
+
+def retract_vector_index_keys(spark, path: str, vec_ids) -> dict:
+    """Retract vectors BY KEY from a persisted index, either tier —
+    the vector twin of ``dedup.retract_index_keys``: a refresh crawl
+    re-embeds changed pages and must first remove their stale vectors,
+    and batch-level retention (``expire``) cannot name individual
+    pages. Removes every posting whose ``vec_id`` is in ``vec_ids``,
+    rewriting ONLY the ``(ingest_batch, cell)`` partitions that contain
+    them (``sources.sinks.retract_keys_from_parquet`` — tmp/old rename
+    protocol, crash-rerunnable, untouched partitions byte-identical).
+
+    The MODEL is deliberately untouched: extensions assign with the
+    stored centroids, so retraction must not retrain (a probe would
+    otherwise route against centroids the survivors were never assigned
+    with). Centroid refresh is ``rebuild_vector_index``. Pinned in
+    tests/test_index_retract.py: grown-then-retracted equals a fresh
+    build over the survivors whenever the retracted ids lie outside the
+    training sample; retraction that would empty the postings is
+    refused."""
+    from ..sources.sinks import retract_keys_from_parquet
+
+    return {"postings": retract_keys_from_parquet(
+        spark, f"{path}/postings", "vec_id", vec_ids)}
+
+
+def _rebuild(spark, path: str, vectors_of, **train) -> None:
+    """Retrain the model over the GROWN index and re-encode every
+    posting, keeping the stored encoding mode (hardcoding residual
+    would silently flip a raw-code index's ADC semantics) and each
+    posting's ``ingest_batch`` (so ``before_batch`` snapshot reads stay
+    meaningful). ``vectors_of(postings)`` gives the (vec_id, embedding,
+    ingest_batch) rows to re-encode, one per posting.
+
+    Crash safety: the new model+postings are built complete at a
+    sibling ``__rebuild_tmp`` tree, then swapped in with the tmp/old
+    rename pair (the ``compact_parquet`` protocol) — re-runnable after
+    a crash at any point; readers never see a half-rebuilt index."""
+    from ..sources.sinks import commit_swap, recover_swap, swap_paths
+
+    local, tmp, old = swap_paths(path, "rebuild")
+    recover_swap(local, tmp, old, "rebuild")
+    by_residual = load_vector_index_model(spark, path).by_residual
+    vectors = vectors_of(spark.read.parquet(f"{path}/postings"))
+    model = _train_model(vectors, by_residual=by_residual, **train)
+    _save_model(spark, model, f"file://{tmp}")
+    if model.cents:
+        _commit_postings(_encode(vectors, model, ("ingest_batch",)),
+                         f"file://{tmp}/postings", "static")
+    commit_swap(local, tmp, old, "rebuild")
+
+
+def rebuild_vector_index(spark, path: str, n_cells: int = 8,
+                         n_iters: int = IVF_TRAIN_ITERS,
+                         sample_size: int = IVF_SAMPLE_SIZE) -> None:
+    """Retrain a flat index's quantizer over the grown index and
+    re-assign every posting in place — the lifecycle step extensions
+    deliberately skip (they assign with stored centroids so ingest
+    stays cheap; after enough drift the recall monitor says it's time).
+    Training is the build's rule over the WHOLE index, so a rebuilt
+    index is pinned EQUAL to ``write_vector_index`` over the same
+    vectors (tests/test_index_retract.py)."""
+    _rebuild(spark, path,
+             lambda postings: postings.select("vec_id", "embedding",
+                                              "ingest_batch"),
+             n_cells=n_cells, n_iters=n_iters, sample_size=sample_size)
 
 
 def rebuild_vector_index_pq(spark, path: str, corpus: DataFrame,
@@ -1513,69 +1397,24 @@ def rebuild_vector_index_pq(spark, path: str, corpus: DataFrame,
                             sample_size: int = IVF_SAMPLE_SIZE,
                             pq_sample_size: int = PQ_SAMPLE_SIZE
                             ) -> None:
-    """Retrain the PQ index over the grown corpus and re-encode every
-    posting in place — the drift answer for the PQ tier. The index
-    stores codes only, so the rebuild joins the postings' (vec_id,
-    ingest_batch) against the full-precision ``corpus`` for the
-    vectors to re-encode (each posting keeps its ingest_batch, so
-    snapshot reads stay meaningful). Same tmp/old swap protocol as
-    ``rebuild_vector_index`` — crash-rerunnable, readers never see a
-    half-rebuilt index. A posting whose vec_id the corpus no longer
-    carries is a retraction the caller skipped — it raises rather
-    than silently dropping rows."""
-    from ..sources.sinks import commit_swap, recover_swap, swap_paths
+    """``rebuild_vector_index`` for a PQ index: the postings hold codes
+    only, so each posting's vector comes from the full-precision
+    ``corpus`` (one row per vec_id). A posting whose vec_id the corpus
+    no longer carries is a retraction the caller skipped — it raises
+    rather than silently dropping rows."""
+    def vectors_of(postings: DataFrame) -> DataFrame:
+        posts = (postings.select("vec_id", "ingest_batch")
+                 .join(corpus.select("vec_id", "embedding"), "vec_id",
+                       "left"))
+        n_lost = posts.filter(F.col("embedding").isNull()).count()
+        if n_lost:
+            raise ValueError(
+                f"rebuild_vector_index_pq: {n_lost} postings have no "
+                "corpus vector — retract them first "
+                "(retract_vector_index_keys), the rebuild never drops "
+                "rows silently")
+        return posts
 
-    local, tmp, old = swap_paths(path, "rebuild")
-    recover_swap(local, tmp, old, "rebuild")
-
-    # the rebuild preserves the index's stored encoding mode (review
-    # r13: hardcoding residual would silently flip a raw-code index's
-    # ADC semantics on rebuild)
-    _, _, by_residual = load_ivf_pq_model(spark, f"{path}/pq_model")
-    keys = (spark.read.parquet(f"{path}/postings")
-            .select("vec_id", "ingest_batch"))
-    posts = keys.join(corpus.select("vec_id", "embedding"), "vec_id",
-                      "left")
-    n_lost = posts.filter(F.col("embedding").isNull()).count()
-    if n_lost:
-        raise ValueError(
-            f"rebuild_vector_index_pq: {n_lost} postings have no "
-            f"corpus vector — retract them first "
-            "(retract_vector_index_keys), the rebuild never drops "
-            "rows silently")
-    sample_rows = (posts.orderBy("vec_id").limit(
-        max(sample_size, pq_sample_size))
-        .select("vec_id", "embedding").collect())
-    sample = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
-              for r in sample_rows]
-    coarse = train_ivf_centroids(
-        sample[:sample_size], n_cells, n_iters) if sample else []
-    cents = list(enumerate(coarse))
-    vecs = [v for _, v in sample[:pq_sample_size]]
-    books = (_train_pq_codebooks(
-        pq_residuals(vecs, coarse) if by_residual else vecs, m, ksub)
-        if sample else [])
-    rows = [("meta", 0, 0, [1.0 if by_residual else 0.0])]
-    rows += [("coarse", i, 0, c) for i, c in cents]
-    rows += [("pq", ci, j, c)
-             for j, book in enumerate(books)
-             for ci, c in enumerate(book)]
-    spark.createDataFrame(
-        rows, "kind string, idx long, sub long, vec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"file://{tmp}/pq_model")
-    if cents:
-        # encode each DISTINCT vec_id once before re-attaching batch
-        # keys (ADVICE r13: a vec_id present in two ingest_batches
-        # would otherwise square through this join — 2 postings in, 4
-        # out — unlike the row-preserving flat rebuild; latent only
-        # because refresh retracts before extending)
-        (_pq_assign(posts.select("vec_id", "embedding")
-                    .dropDuplicates(["vec_id"]), cents, books,
-                    by_residual)
-         .join(keys, "vec_id")
-         .select("vec_id", "codes", "vnorm", "ingest_batch", "cell")
-         .write.mode("overwrite")
-         .partitionBy("ingest_batch", "cell")
-         .parquet(f"file://{tmp}/postings"))
-    commit_swap(local, tmp, old, "rebuild")
+    _rebuild(spark, path, vectors_of, n_cells=n_cells, n_iters=n_iters,
+             sample_size=sample_size, m=m, ksub=ksub,
+             pq_sample_size=pq_sample_size)

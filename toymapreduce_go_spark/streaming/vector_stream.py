@@ -2,12 +2,17 @@
 persisted IVF index (``operators.similarity.write_vector_index``
 family) grows under ONE Structured Streaming checkpoint, completing
 the vector-search lifecycle: build once, EXTEND per arrival batch,
-probe many.
+probe many. The index lives at ``{state_dir}/vindex``: its one model
+format, (kind, idx, sub, vec) rows at ``vindex/model``
+(``similarity.load_vector_index_model``), and its postings at
+``vindex/postings`` partitioned by (ingest_batch, cell).
 
 Contract per batch (the dedup stream's exactly-once conventions):
 
 - the first non-empty batch TRAINS the coarse quantizer and builds the
-  index, stamping its own ``ingest_batch`` partition id;
+  index, stamping its own ``ingest_batch`` partition id — only when the
+  model reads as "no model yet" (``NoVectorIndexModel``); a model in
+  any other format fails the batch instead of rebuilding over it;
 - every later batch assigns with the STORED centroids
   (``extend_vector_index`` — one scan-side argmax projection, cost
   independent of index size) and dynamic-overwrites only its own
