@@ -109,9 +109,21 @@ def test_channels_partition_and_agree_with_their_modules(spark):
     the sitemap-only remainder (ch0 ∪ ch1 = sitemap seeds — the two
     discovery channels partition the gated uncrawled pages), ch2's
     per-domain counts are exactly recrawl_schedule's stale counts, and
-    no canon appears in two channels."""
+    no canon appears in two channels. Every Spark job the build runs,
+    in its worker threads too, carries the caller's job group."""
     docs = load_table(spark, SF_DIR, "documents")
-    rows = fetch_channels(docs).collect()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    unlabelled = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("fetch_channels.construct", "fetch_channels construct")
+    try:
+        channels = fetch_channels(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert tracker.getJobIdsForGroup("fetch_channels.construct")
+    assert not set(tracker.getJobIdsForGroup(None)) - unlabelled
+    rows = channels.collect()
     by_ch = {c: {r.canon for r in rows if r.ch == c} for c in (0, 1, 2)}
     assert all(by_ch.values())                      # every channel live
     assert not (by_ch[0] & by_ch[1]) and not (by_ch[0] & by_ch[2]) \

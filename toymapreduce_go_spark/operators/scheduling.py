@@ -148,6 +148,8 @@ def fetch_channels(documents: DataFrame,
     on ReuseExchange here let the rank join run twice)."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from .linkgraph import pagerank_state
     from .redirects import fixture_resolved_redirects, rekey_on_final
     # shared per-plan artifacts (r14): ONE parsed robots frame feeds
@@ -168,13 +170,21 @@ def fetch_channels(documents: DataFrame,
     # thread assembles the sitemap/recrawl gate chains. Plans, RDDs
     # and results are identical — only the build order changes.
     pool = ThreadPoolExecutor(max_workers=5)
+
+    def submit(fn, *args, **kwargs):
+        # each task gets its own copy of the caller's local properties
+        # (job group, description), so the jobs it runs at construct
+        # time carry the caller's labels
+        return pool.submit(inheritable_thread_target(documents.sparkSession)(
+            fn), *args, **kwargs)
+
     try:
-        f_state = pool.submit(pagerank_state, documents, ranks=ranks)
-        f_rules = pool.submit(shared_robots_rules, documents)
-        f_entries = pool.submit(
+        f_state = submit(pagerank_state, documents, ranks=ranks)
+        f_rules = submit(shared_robots_rules, documents)
+        f_entries = submit(
             lambda: sitemap_entries(synthesize_sitemaps(documents))
             .localCheckpoint(eager=False))
-        f_resolved = (pool.submit(fixture_resolved_redirects, documents)
+        f_resolved = (submit(fixture_resolved_redirects, documents)
                       if redirects is True else None)
 
         def _link_channel() -> DataFrame:
@@ -192,7 +202,7 @@ def fetch_channels(documents: DataFrame,
                     # linkgraph.pagerank_state)
                     .localCheckpoint(eager=False))
 
-        f_a = pool.submit(_link_channel)
+        f_a = submit(_link_channel)
         rules = f_rules.result()
         entries = f_entries.result()
         resolved: "DataFrame | bool" = (
