@@ -34,10 +34,7 @@ def materialize(df) -> None:
     """Full-fidelity action: the noop sink executes the complete plan
     (every column, every operator) without driver-side collect; count()
     would let Catalyst prune projections and sorts and under-report."""
-    try:
-        df.write.format("noop").mode("overwrite").save()
-    except Exception:
-        df.count()
+    df.write.format("noop").mode("overwrite").save()
 
 
 def load_prior_bench(repo_dir: str, sf=None,

@@ -5,11 +5,10 @@ driver-recorded BENCH_r*.json, without ever suppressing the metrics line."""
 from __future__ import annotations
 
 import json
-import sys
 
-sys.path.insert(0, "/root/repo")
+import pytest
 
-from bench import find_regressions, load_prior_bench  # noqa: E402
+from bench import find_regressions, load_prior_bench, materialize
 
 
 def test_find_regressions_flags_only_real_slowdowns():
@@ -163,3 +162,15 @@ def test_tier2_guard_fires_on_planted_regression(tmp_path):
     speed2 = min(machine_speed_ratio(drifted, prior), SPEED_CAP)
     assert find_regressions({**drifted, "heavy": 4.0 * 1.4}, prior,
                             speed=speed2) == []
+
+
+def test_materialize_raises_when_the_noop_write_fails(spark):
+    """A query whose full plan fails must reach the bench's ``errors``,
+    not be timed as a ``count()`` that Catalyst prunes down to a row
+    count (here the failing projection is never evaluated)."""
+    from pyspark.sql import functions as F
+
+    failing = spark.range(1).select(
+        F.raise_error(F.lit("planted noop-write failure")))
+    with pytest.raises(Exception, match="planted noop-write failure"):
+        materialize(failing)

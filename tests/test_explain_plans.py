@@ -585,8 +585,7 @@ def test_lsh_dedup_agg_partially_aggregates_below_its_exchange(spark):
                                                "embeddings")))
     # a map-side partial max exists (raw multiplicity combines before
     # any exchange), and any exchange feeding the dedup agg is keyed
-    # at pair grain or finer (vec_id alone — the spread floor — also
-    # co-locates the pair groups), never on probe_id alone
+    # at pair grain or finer, never on probe_id alone
     assert "partial_max" in plan, plan
     assert "Window" in plan, plan
     # exactly one probe_id-only exchange: the window's, which consumes
@@ -625,18 +624,68 @@ def test_lsh_planted_hot_bucket_stays_exact(spark):
         assert ns == want, (p, ns)
 
 
-def test_spread_for_compute_is_a_noop_at_scan_parallelism(spark):
-    """The adaptive parallelism floor fires only below the session
-    default — a frame that already has enough partitions passes
-    through IDENTICALLY (at production scan parallelism the extra
-    exchange must not exist)."""
-    from toymapreduce_go_spark.functions.partitioning import (
-        spread_for_compute)
-    target = spark.sparkContext.defaultParallelism
-    wide = spark.range(0, 10000, 1, target + 4) \
-        .withColumnRenamed("id", "vec_id")
-    assert spread_for_compute(wide, "vec_id") is wide
-    narrow = spark.range(0, 100, 1, 1).withColumnRenamed("id", "vec_id")
-    spread = spread_for_compute(narrow, "vec_id")
-    assert spread.rdd.getNumPartitions() == target
-    assert sorted(r["vec_id"] for r in spread.collect()) == list(range(100))
+def _plant_embeddings(path, n_rows: int) -> None:
+    """One single-row-group embeddings file (the local fixtures' shape)
+    of ``n_rows`` 64-dim vectors, written without Spark."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    rng = np.random.default_rng(7)
+    emb = rng.standard_normal((n_rows, 64)).astype(np.float32)
+    pq.write_table(pa.table({
+        "vec_id": pa.array(np.arange(n_rows, dtype=np.int64)),
+        "embedding": pa.array(list(emb), type=pa.list_(pa.float32())),
+        "label": pa.array(np.arange(n_rows, dtype=np.int32) % 10),
+    }), str(path), row_group_size=n_rows)
+
+
+def test_load_table_is_the_one_parallelism_floor(spark, tmp_path):
+    """``load_table`` is the only place a small compute-heavy input is
+    fanned out: an in-window documents/embeddings file (256 KB–64 MB,
+    decided from file bytes) gets exactly one round-robin exchange to
+    the default parallelism, and a relational table or a sub-window
+    file gets none. The operators over that frame add no floor of
+    their own, so building them runs no Spark job — the fan-out
+    exchange executes inside the query, not while it is built."""
+    import re
+
+    from toymapreduce_go_spark.operators.dedup import embedding_near_dup
+    from toymapreduce_go_spark.operators.similarity import (
+        ann_lsh_portable, knn_bruteforce, knn_label_vote)
+    from toymapreduce_go_spark.sources.registry import (FANOUT_MAX_BYTES,
+                                                        FANOUT_MIN_BYTES)
+    big, small = tmp_path / "big", tmp_path / "small"
+    big.mkdir()
+    small.mkdir()
+    _plant_embeddings(big / "embeddings.parquet", 2000)
+    _plant_embeddings(small / "embeddings.parquet", 100)
+    (big / "orders.parquet").write_bytes(
+        (big / "embeddings.parquet").read_bytes())
+    size = (big / "embeddings.parquet").stat().st_size
+    assert FANOUT_MIN_BYTES < size < FANOUT_MAX_BYTES, size
+    assert (small / "embeddings.parquet").stat().st_size < FANOUT_MIN_BYTES
+
+    sc = spark.sparkContext
+    target = sc.defaultParallelism
+
+    def round_robins(df):
+        return re.findall(r"RoundRobinPartitioning\((\d+)\)",
+                          plan_of(df, "simple"))
+
+    emb = load_table(spark, str(big), "embeddings")
+    assert round_robins(emb) == [str(target)]
+    assert round_robins(load_table(spark, str(big), "orders")) == []
+    assert round_robins(load_table(spark, str(small), "embeddings")) == []
+
+    tracker = sc.statusTracker()
+    unlabelled = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("one_floor.construct", "vector queries construct")
+    try:
+        for build in (knn_bruteforce, knn_label_vote, ann_lsh_portable,
+                      embedding_near_dup):
+            build(emb)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert not tracker.getJobIdsForGroup("one_floor.construct")
+    assert not set(tracker.getJobIdsForGroup(None)) - unlabelled

@@ -5,8 +5,9 @@ spot): every vocabulary-bounding knob in the repo (`train_bpe
 min_count/max_vocab`, `lm_bigram_quality min_count/broadcast_bigrams`,
 `lm_quality_pruned`, `heavy_hitters`' CMS candidate gate) exists for
 corpora whose DISTINCT-token count grows like web text. This fixture
-makes those knobs measurable in wall-clock/row-count terms
-(tools/zipf_knobs.py publishes the table in SCALE.md).
+makes those knobs measurable in wall-clock/row-count terms (the
+table is in SCALE.md; its registry-query rows re-run with
+``python tools/profile_queries.py <out_dir> out.json <query>``).
 
 Shape: ``n_docs`` documents of ``words_per_doc`` tokens drawn from a
 ``vocab``-word vocabulary under a Zipf(s=1.07) rank-frequency law (the

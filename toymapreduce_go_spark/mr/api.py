@@ -139,14 +139,6 @@ def run_map_reduce(spark: SparkSession,
     output — the sequential oracle's "key value" line format
     (mrsequential.go:84).
     """
-    # Map parallelism floors at the session default (r14): the reference
-    # coordinator splits its input among ALL map workers
-    # (coordinator.go task queue); a single-row-group parquet input
-    # would otherwise run every Python map task on one core. No-op once
-    # the input already has enough partitions; the reduce side is
-    # unchanged (n_reduce sorted hash partitions either way).
-    from ..functions.partitioning import spread_for_compute
-    inputs = spread_for_compute(inputs, inputs.columns[0])
     return _map_reduce(spark, inputs.rdd, map_f, reduce_f, n_reduce)
 
 

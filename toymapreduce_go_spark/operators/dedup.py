@@ -725,17 +725,12 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.4,
     import numpy as np
     import pandas as pd
 
-    from ..functions.partitioning import spread_for_compute
-
-    # floor the scan parallelism: the grid replication below multiplies
-    # whatever partitioning the scan has, and one small row group would
-    # otherwise serialize the Arrow transfer of every replica
     # pmod, not %: negative vec_ids (the pipeline's synthetic chunk ids)
     # must land IN the 0..n_blocks-1 grid the inline() sequences below
     # cover — a signed % gives a negative blk whose cross-block groups
     # get only one side, silently dropping those pairs (matches
     # semantic_dedup._cell_block_replicas).
-    e = spread_for_compute(embeddings, "vec_id").select(
+    e = embeddings.select(
         "vec_id", "embedding",
         F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int").alias("blk"))
     # the (bi <= bj) grid is statically known from n_blocks, so each

@@ -105,13 +105,8 @@ def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.4,
         f"transform(slice(array_sort(transform(sequence(1, {len(cents)}),"
         f" i -> struct(-element_at(sc, i) as ns, -(i - 1) as nc))),"
         f" 1, {n_assign}), s -> -s.nc)")
-    from ..functions.partitioning import spread_for_compute
-
-    # the assignment scores are interpreted higher-order-function folds
-    # (n_cells × dims lambda calls per vector) — floor the scan
-    # parallelism so one small row group can't serialize them
     assigned = (
-        spread_for_compute(embeddings, "vec_id")
+        embeddings
         .select("vec_id", "embedding",
                 l2_norm(F.col("embedding")).alias("nrm"))
         .withColumn("sc", F.expr(scores_sql))

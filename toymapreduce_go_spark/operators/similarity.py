@@ -36,15 +36,12 @@ def knn_bruteforce(embeddings: DataFrame, n_probes: int = 5,
     At 1000 executors this reads the corpus once, computes k·|probes|
     locally per partition, and shuffles only |probes|·k candidate rows.
     """
-    from ..functions.partitioning import spread_for_compute
     probes = (
         embeddings.orderBy("vec_id").limit(n_probes)
         .select(F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_emb"))
     )
-    # |probes| interpreted cosine folds per corpus row — floor the scan
-    # parallelism so one small row group can't serialize them
     scored = (
-        spread_for_compute(embeddings, "vec_id").alias("c")
+        embeddings.alias("c")
         .join(broadcast(probes), F.col("vec_id") != F.col("probe_id"))
         .withColumn("cos", F.expr(cosine_sim_sql("probe_emb", "embedding")))
     )
@@ -76,14 +73,13 @@ def knn_label_vote(embeddings: DataFrame, n_probes: int = 20,
     outgrows a full scan per eval, run the same vote over an ANN tier's
     neighbor lists (``ann_ivf_pq`` shortlists + a label join) — the
     vote/rollup half is neighbor-frame-agnostic."""
-    from ..functions.partitioning import spread_for_compute
     probes = (
         embeddings.orderBy("vec_id").limit(n_probes)
         .select(F.col("vec_id").alias("probe_id"),
                 F.col("embedding").alias("probe_emb"),
                 F.col("label").alias("true_label")))
     scored = (
-        spread_for_compute(embeddings, "vec_id")
+        embeddings
         .join(broadcast(probes),
               F.col("vec_id") != F.col("probe_id"))
         .withColumn("cos", F.expr(cosine_sim_sql("probe_emb",
@@ -239,12 +235,7 @@ def ann_lsh_portable(embeddings: DataFrame, n_probes: int = 5,
     plan, but each band's sign sketch uses seeded literal planes so the
     DuckDB oracle reproduces buckets, candidates, and ranks exactly
     (including the per-band Hamming-1 multi-probe expansion)."""
-    from ..functions.partitioning import spread_for_compute
     all_planes = lsh_plane_weights(n_bands * n_planes)
-    # the per-row plane-dot folds are interpreted higher-order
-    # functions (bands × planes × dims lambda calls per vector) — floor
-    # the scan parallelism so one small row group can't serialize them
-    embeddings = spread_for_compute(embeddings, "vec_id")
     buckets = F.array(*[
         _sign_sketch_literal(
             "embedding", all_planes[b * n_planes:(b + 1) * n_planes])
@@ -557,15 +548,6 @@ def _assign_cells(embeddings: DataFrame,
     the in-session IVF tiers and the persisted flat index;
     ``keep_cols`` rides extra columns through (the rebuild path keeps
     each posting's original ingest_batch)."""
-    from ..functions.partitioning import spread_for_compute
-
-    # the argmax fold is an interpreted higher-order expression
-    # (n_cells × dims lambda calls per vector) — floor the scan
-    # parallelism so one small row group can't serialize it (no-op at
-    # production scan parallelism; runs above any pushed filter, so
-    # PushedFilters are unaffected)
-    embeddings = spread_for_compute(embeddings, "vec_id")
-
     # One projected corpus-vector norm, reused by every centroid score —
     # inlining cosine_sim n_cells times would recompute it n_cells times
     # per row.

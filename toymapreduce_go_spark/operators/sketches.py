@@ -67,13 +67,7 @@ def heavy_hitters(documents: DataFrame,
         raise ValueError("threshold_milli must be a positive integer "
                          "(milli-units; float thresholds diverge "
                          "cross-engine)")
-    from ..functions.partitioning import spread_for_compute
-    # both corpus passes tokenize scan-side; floor the parallelism so a
-    # small single-row-group file doesn't serialize the tokenize (no-op
-    # at production scan parallelism — see spread_for_compute)
-    tok = (spread_for_compute(
-        documents.select("doc_id", "text"), "doc_id")
-        .select(F.explode(tokens("text")).alias("word")))
+    tok = documents.select(F.explode(tokens("text")).alias("word"))
 
     # pass 1: the sketch — count-combinable and keyed on a FIXED d*w
     # space, so the shuffle is bounded per partition no matter the
